@@ -22,12 +22,8 @@ from pyspark.sql import functions as F
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
-    # Bound the bench JVM: on this single host spark.local.dir lives on
-    # tmpfs, so heap + shuffle/persist spill share ONE 125 GiB RAM budget.
-    # The round-4 bench died to the kernel OOM-killer at 48g heap + 72 GB
-    # tmpfs spill; 32g heap leaves ~90 GiB of headroom for spill and the
-    # OS (VERDICT r04 "What's wrong" #1c). Env override still wins.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    # the driver heap is session.get_spark's RAM-derived default
+    # ($SPARK_GRAFT_DRIVER_MEM overrides it)
     from search_engine_spark.functions.tokenize import query_tokens_py
     from search_engine_spark.operators.corpus_stats import build_bm25_index
     from search_engine_spark.operators.dedup import (

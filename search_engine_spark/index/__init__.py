@@ -1,13 +1,13 @@
 from search_engine_spark.index.codec import (
-    decode_block,
-    encode_blocks_for_term,
+    bm25_contrib,
+    decode_blocks,
     varbyte_decode,
     varbyte_encode,
 )
 
 __all__ = [
-    "decode_block",
-    "encode_blocks_for_term",
+    "bm25_contrib",
+    "decode_blocks",
     "varbyte_decode",
     "varbyte_encode",
 ]

@@ -18,13 +18,17 @@ blocks of <= block_size docs. Per block we store:
                  index/query.py)
 
 Varbyte: big-endian 7-bit digits, high bit set on the TERMINAL byte.
-Encode/decode are numpy-vectorized (no per-value Python in decode, which is
-the query-time hot path; max 5 digit-rounds for 32-bit deltas).
+Encode/decode are numpy-vectorized (no per-value Python in decode; max 5
+digit-rounds for 32-bit deltas), and both work a whole batch of blocks per
+call: the build encodes a partition at once, and every reader decodes a
+table of blocks with ``decode_blocks`` — three numpy decode calls per
+table, not three per 128-posting block.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 
 def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -91,43 +95,57 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     return vals
 
 
-def encode_blocks_for_term(
-    doc_ints: np.ndarray,
-    tfs: np.ndarray,
-    scores: np.ndarray,
-    block_size: int,
-) -> list[tuple[int, int, int, int, bytes, bytes, float]]:
-    """Cut one term's sorted postings into encoded blocks.
+def decode_blocks(
+    first_doc: np.ndarray,
+    n: np.ndarray,
+    doc_deltas,
+    tfs,
+    dls,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Blocks -> (docs, tf, dl) int64 arrays in block order, with THREE
+    ``varbyte_decode`` calls in total (the batch counterpart of the build's
+    one-call-per-column partition encoder).
 
-    Returns [(block_id, first_doc, last_doc, n, doc_deltas, tfs_vb,
-    max_score)]. ``doc_ints`` must be sorted ascending; ``scores`` are the
-    weighted per-doc contributions used for the block-max bound.
-    """
-    out = []
-    n = len(doc_ints)
-    for bi, lo in enumerate(range(0, n, block_size)):
-        hi = min(lo + block_size, n)
-        docs = doc_ints[lo:hi].astype(np.uint64)
-        deltas = np.diff(docs)
-        out.append(
-            (
-                bi,
-                int(docs[0]),
-                int(docs[-1]),
-                hi - lo,
-                varbyte_encode(deltas),
-                varbyte_encode(tfs[lo:hi].astype(np.uint64)),
-                float(scores[lo:hi].max()),
-            )
-        )
-    return out
+    ``first_doc`` and ``n`` are per-block; the payloads are joined in block
+    order (``binary_values`` of an Arrow column is its data buffer). Blocks
+    may mix terms: docs are a cumsum segmented at block starts, anchored on
+    each ``first_doc`` (int64 wrap-around in the running sum cancels in the
+    per-block difference, so any doc id below 2^63 decodes exactly)."""
+    first = np.asarray(first_doc, dtype=np.int64)
+    counts = np.asarray(n, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
+    steps = np.ones(int(counts.sum()), dtype=bool)
+    steps[starts] = False
+    run = np.zeros(steps.size, dtype=np.int64)
+    run[steps] = varbyte_decode(doc_deltas).view(np.int64)
+    np.cumsum(run, out=run)
+    docs = run + np.repeat(first - run[starts], counts)
+    return (
+        docs,
+        varbyte_decode(tfs).view(np.int64),
+        varbyte_decode(dls).view(np.int64),
+    )
 
 
-def decode_block(first_doc: int, n: int, doc_deltas: bytes, tfs: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """-> (doc_ints int64[n], tfs int64[n])."""
-    deltas = varbyte_decode(doc_deltas)
-    docs = np.empty(n, dtype=np.int64)
-    docs[0] = first_doc
-    if n > 1:
-        docs[1:] = first_doc + np.cumsum(deltas.astype(np.int64))
-    return docs, varbyte_decode(tfs).astype(np.int64)
+def binary_values(col: pa.Array | pa.ChunkedArray):
+    """The payloads of an Arrow binary column joined in row order: a view of
+    the column's data buffer, with no per-row copy (a multi-chunk column is
+    concatenated once)."""
+    if len(col) == 0:
+        return b""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.chunk(0) if col.num_chunks == 1 else pa.concat_arrays(col.chunks)
+    _, offsets, data = col.buffers()
+    off = np.frombuffer(
+        offsets, dtype=np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    )
+    lo, hi = int(off[col.offset]), int(off[col.offset + len(col)])
+    return memoryview(data)[lo:hi] if data is not None else b""
+
+
+def bm25_contrib(tf, dl, mult, k1: float, b: float, avgdl: float):
+    """One posting's BM25 contribution, ``mult`` = query-tf * idf (times
+    doc weight for the block-max bound). The expression order is part of
+    the contract: every reader and the encoder evaluate it exactly so, so
+    their scores agree bit for bit."""
+    return mult * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))

@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from search_engine_spark.index.codec import varbyte_decode
+from search_engine_spark.index.codec import bm25_contrib, decode_blocks
 from search_engine_spark.operators.scoring import _local_df
 
 _SCORE_SCHEMA = StructType(
@@ -175,50 +175,43 @@ class CompressedIndex:
         python runner per task (measured ~5-6s/action on warm plans).
         """
         k1, b, avgdl = self.k1, self.b, self.avgdl
-        qtf = dict(qtf)
-        idfs = dict(idfs)
+        mults = {t: float(c) * float(idfs.get(t, 0.0)) for t, c in qtf.items()}
         tbit = {t: 1 << i for i, t in enumerate(sorted(qtf))}
 
         def run(batches):
             for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    if fin_arr is not None:
-                        lo = np.searchsorted(fin_arr, row.first_doc, side="left")
-                        hi = np.searchsorted(fin_arr, row.last_doc, side="right")
-                        if hi <= lo:
-                            continue  # no finalist in this block's range
-                    n = int(row.n)
-                    docs = np.empty(n, dtype=np.int64)
-                    docs[0] = row.first_doc
-                    if n > 1:
-                        docs[1:] = row.first_doc + np.cumsum(
-                            varbyte_decode(row.doc_deltas).astype(np.int64)
-                        )
-                    tfs = varbyte_decode(row.tfs).astype(np.float64)
-                    dls = varbyte_decode(row.dls).astype(np.float64)
-                    wts = np.frombuffer(row.weights, dtype=np.float64)
-                    if fin_arr is not None:
-                        # docs ascending, fin_arr sorted: membership via
-                        # searchsorted (no np.isin re-sort)
-                        pos = np.searchsorted(fin_arr, docs, side="left")
-                        pos[pos >= len(fin_arr)] = len(fin_arr) - 1
-                        mask = fin_arr[pos] == docs
-                        if not mask.any():
-                            continue
-                        docs, tfs, dls, wts = docs[mask], tfs[mask], dls[mask], wts[mask]
-                    mult = float(qtf.get(row.term, 1)) * float(idfs.get(row.term, 0.0))
-                    contrib = mult * (tfs * (k1 + 1)) / (
-                        tfs + k1 * (1 - b + b * dls / avgdl)
+                if fin_arr is not None:
+                    # drop blocks whose [first_doc, last_doc] range holds no
+                    # finalist before decoding anything
+                    lo = np.searchsorted(fin_arr, pdf["first_doc"].to_numpy(), side="left")
+                    hi = np.searchsorted(fin_arr, pdf["last_doc"].to_numpy(), side="right")
+                    pdf = pdf[hi > lo]
+                if pdf.empty:
+                    continue
+                n = pdf["n"].to_numpy(dtype=np.int64)
+                docs, tfs, dls = decode_blocks(
+                    pdf["first_doc"].to_numpy(),
+                    n,
+                    *(b"".join(pdf[c]) for c in ("doc_deltas", "tfs", "dls")),
+                )
+                mult = np.repeat(pdf["term"].map(mults).fillna(0.0).to_numpy(np.float64), n)
+                cols = {
+                    "doc_int": docs,
+                    "contrib": bm25_contrib(tfs, dls, mult, k1, b, avgdl),
+                    "weight": np.frombuffer(b"".join(pdf["weights"]), dtype=np.float64),
+                }
+                if with_term:
+                    cols["tmask"] = np.repeat(
+                        pdf["term"].map(tbit).fillna(0).to_numpy(np.int64), n
                     )
-                    cols = {"doc_int": docs, "contrib": contrib, "weight": wts}
-                    if with_term:
-                        cols["tmask"] = np.full(
-                            len(docs), tbit.get(row.term, 0), dtype=np.int64
-                        )
-                    outs.append(pd.DataFrame(cols))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                if fin_arr is not None:
+                    # fin_arr sorted: membership via searchsorted
+                    pos = np.minimum(np.searchsorted(fin_arr, docs), len(fin_arr) - 1)
+                    mask = fin_arr[pos] == docs
+                    if not mask.any():
+                        continue
+                    cols = {c: v[mask] for c, v in cols.items()}
+                yield pd.DataFrame(cols)
 
         return run
 

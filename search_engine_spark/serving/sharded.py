@@ -11,19 +11,19 @@ partial scores before ranking, not merge per-shard top-k lists.
 
 Protocol per query (``ShardedWarmReader.search_topk``):
 
-1. scatter — every shard decodes only the query terms' blocks from ITS
-   part_id slice and returns sparse partials: {doc_int: unweighted
-   contrib sum} plus {doc_int: doc_weight} (weights ride inside the
-   blocks as raw float64, index/build.py:166, so shards need NO
-   corpus-sized doc_dim array — shard memory is its postings slice plus
-   the vocabulary-sized idf map).
+1. scatter — every shard scores only the query terms' postings from
+   ITS part_id slice (decoded on first use, ``serving/postings``) and
+   returns sparse partials: doc_ints, unweighted contrib sums and
+   doc_weights (weights ride inside the blocks as raw float64,
+   index/build.py POSTINGS_SCHEMA, so shards need NO corpus-sized
+   doc_dim array — shard memory is its postings slice plus the
+   vocabulary-sized idf map).
 2. gather — sum contribs per doc across shards, multiply by weight
    once, rank by the engine-wide tie policy (score desc, doc_int asc).
 3. dense zero-pad — when fewer than k positive scores exist, pad with
    the smallest unmatched doc_ints (identical semantics to
-   operators/scoring.search_topk's J1-note trap handling): walk
-   doc_int 0,1,2,... skipping matched docs, which needs only
-   corpus_size, not a doc list.
+   operators/scoring.search_topk's J1-note trap handling), which needs
+   only corpus_size, not a doc list.
 4. resolve doc_ids for the <= k finalists by a pruned pyarrow read of
    doc_dim (``doc_int isin finalists``) — an O(k) lookup.
 
@@ -41,20 +41,16 @@ paths for any shard count (tests/test_warm_reader.py).
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import numpy as np
 import pyarrow.dataset as pads
-import pyarrow.parquet as papq
-
-import json
-import os
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.functions.tokenize import query_tokens_py
-from search_engine_spark.index.codec import varbyte_decode
-
-_BLOCK_COLS = ["term", "first_doc", "n", "doc_deltas", "tfs", "dls", "weights"]
+from search_engine_spark.index.codec import bm25_contrib
+from search_engine_spark.serving.postings import PostingLists, rank_topk, read_corpus
 
 
 class IndexShard:
@@ -74,57 +70,24 @@ class IndexShard:
         self.part_ids = sorted(part_ids)
         self._idf = idf
         self.k1, self.b, self.avgdl = k1, b, avgdl
-        self._dataset = pads.dataset(os.path.join(path, "postings"), format="parquet")
-        self._part_filter = pads.field("part_id").isin(self.part_ids)
-        self._blocks_memo: dict[str, list[tuple]] = {}
-
-    def _ensure_terms(self, terms: list[str]) -> None:
-        missing = [t for t in terms if t not in self._blocks_memo]
-        if not missing:
-            return
-        tbl = self._dataset.to_table(
-            columns=_BLOCK_COLS,
-            filter=self._part_filter & pads.field("term").isin(missing),
-        )
-        cols = {c: tbl.column(c).to_pylist() for c in _BLOCK_COLS}
-        for i, t in enumerate(cols["term"]):
-            self._blocks_memo.setdefault(t, []).append(
-                tuple(cols[c][i] for c in _BLOCK_COLS[1:])
-            )
-        for t in missing:
-            self._blocks_memo.setdefault(t, [])
+        self._postings = PostingLists(path, self.part_ids, with_weights=True)
 
     def partial_scores(
         self, qtf: dict[str, int]
-    ) -> tuple[dict[int, float], dict[int, float]]:
-        """({doc_int: sum of idf*mult*tf_saturation over THIS shard's
-        terms}, {doc_int: doc_weight}) — unweighted partials; the gather
-        applies doc_weight exactly once."""
-        k1, b, avgdl = self.k1, self.b, self.avgdl
-        self._ensure_terms(sorted(qtf))
-        contribs: dict[int, float] = {}
-        weights: dict[int, float] = {}
-        for term in sorted(qtf):
-            blocks = self._blocks_memo.get(term, ())
-            if not blocks:
-                continue
-            mult = float(qtf[term]) * float(self._idf.get(term, 0.0))
-            for first_doc, n, d_deltas, d_tfs, d_dls, d_w in blocks:
-                docs = np.empty(n, dtype=np.int64)
-                docs[0] = first_doc
-                if n > 1:
-                    docs[1:] = first_doc + np.cumsum(
-                        varbyte_decode(d_deltas).astype(np.int64)
-                    )
-                tf = varbyte_decode(d_tfs).astype(np.float64)
-                dl = varbyte_decode(d_dls).astype(np.float64)
-                wts = np.frombuffer(d_w, dtype=np.float64)
-                part = mult * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
-                for j in range(n):
-                    d = int(docs[j])
-                    contribs[d] = contribs.get(d, 0.0) + float(part[j])
-                    weights[d] = float(wts[j])
-        return contribs, weights
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc_ints, contribs, weights) per posting of THIS shard's query
+        terms, in sorted term order: unweighted partials (a doc repeats
+        once per matched term); the gather applies doc_weight exactly
+        once."""
+        terms = sorted(qtf)
+        parts = []
+        for t, (docs, tf, dl, w) in zip(terms, self._postings.get(terms)):
+            if docs.size:
+                mult = float(qtf[t]) * float(self._idf.get(t, 0.0))
+                parts.append((docs, bm25_contrib(tf, dl, mult, self.k1, self.b, self.avgdl), w))
+        if not parts:
+            return np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0)
+        return tuple(np.concatenate(c) for c in zip(*parts))
 
 
 class ShardedWarmReader:
@@ -136,17 +99,9 @@ class ShardedWarmReader:
             raise ValueError("n_shards must be >= 1")
         self.path = path
         self.cfg = cfg
-        with open(os.path.join(path, "corpus.json")) as f:
-            c = json.load(f)
-        self.corpus_size = int(c["corpus_size"])
-        self.avgdl = float(c["avgdl"])
-        self.k1 = float(c["k1"])
-        self.b = float(c["b"])
-
-        ts = papq.read_table(os.path.join(path, "term_stats"), columns=["term", "idf"])
-        idf = dict(
-            zip(ts.column("term").to_pylist(), ts.column("idf").to_numpy().tolist())
-        )
+        c, idf = read_corpus(path)
+        self.corpus_size, self.avgdl = int(c["corpus_size"]), float(c["avgdl"])
+        self.k1, self.b = float(c["k1"]), float(c["b"])
         pids = sorted(
             set(
                 pads.dataset(os.path.join(path, "postings"), format="parquet")
@@ -192,30 +147,16 @@ class ShardedWarmReader:
         if not qtf or self.corpus_size == 0:
             return []
 
-        # scatter (production: RPC fan-out) + gather (sum partials)
-        total: dict[int, float] = {}
-        weight: dict[int, float] = {}
-        for shard in self.shards:
-            contribs, wts = shard.partial_scores(qtf)
-            for d, c in contribs.items():
-                total[d] = total.get(d, 0.0) + c
-            weight.update(wts)
-
-        cand = sorted(
-            ((d, c * weight[d]) for d, c in total.items()),
-            key=lambda x: (-x[1], x[0]),
-        )[:k]
-        positives = sum(1 for _, s in cand if s > 0.0)
-        if positives < k:
-            pad_n = k - positives
-            pads_out: list[tuple[int, float]] = []
-            d = 0
-            while len(pads_out) < pad_n and d < self.corpus_size:
-                if d not in total:
-                    pads_out.append((d, 0.0))
-                d += 1
-            cand += pads_out
-        merged = sorted(cand, key=lambda x: (-x[1], x[0]))[:k]
+        # scatter (production: RPC fan-out), then gather: bincount sums
+        # each doc's partials in term order, as the unsharded reader does
+        docs, contribs, wts = (
+            np.concatenate(c) for c in zip(*(sh.partial_scores(qtf) for sh in self.shards))
+        )
+        matched, inv = np.unique(docs, return_inverse=True)
+        weight = np.empty(matched.size)
+        weight[inv] = wts
+        scores = np.bincount(inv, weights=contribs, minlength=matched.size) * weight
+        merged = rank_topk(matched, scores, k, self.corpus_size)
         id_map = self._resolve_doc_ids([d for d, _ in merged])
         return [
             (i + 1, id_map[d], s) for i, (d, s) in enumerate(merged) if s > ms

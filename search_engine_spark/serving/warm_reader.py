@@ -17,17 +17,19 @@ prebuilt pickled index held warm by a web service
 (reference service/text_search.py:35-53 loads the pickled index once,
 then utils/bm250kapi_weighted.py:56-77 scores per request).
 
-Two load modes:
+Two load modes, both holding DECODED posting arrays (doc ids, tf, doc
+length) in RAM, so per-query work is slice-and-score only — no varbyte
+decode on the query path (``serving/postings.PostingLists``):
 
-- ``preload=True`` — read every posting block into a term-keyed dict up
-  front (the reference's whole-index-in-RAM mode). Memory = index size;
-  per-query work = decode of the query terms' blocks only.
+- ``preload=True`` — decode every postings file at load, one file at a
+  time (the reference's whole-index-in-RAM mode). Memory = the decoded
+  postings at 24 bytes each, about 7x the compressed postings files.
 - ``preload=False`` (default) — per-term lazy loads with an unbounded
   memo: a pyarrow dataset scan with a ``term IN (...)`` filter, pruned
-  by parquet row-group min/max statistics. The build sorts postings by
-  (term, doc_int) within range-partitioned files
-  (index/build.py:486-492), so a term's blocks live in O(1) row groups
-  and a cold term costs a few pruned row-group reads, not an index scan.
+  by parquet row-group min/max statistics, decoded on read. The build
+  sorts postings by (term, doc_int) within range-partitioned files
+  (index/build.py), so a term's blocks live in O(1) row groups and a
+  cold term costs a few pruned row-group reads, not an index scan.
 
 Scale note (10^12 docs): one process cannot hold doc-dense arrays for a
 trillion docs — the deployment there is term-range sharding over the
@@ -38,20 +40,16 @@ in ``serving/sharded.py``.
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import numpy as np
-import pyarrow.dataset as pads
 import pyarrow.parquet as papq
-
-import json
-import os
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.functions.tokenize import query_tokens_py
-from search_engine_spark.index.codec import varbyte_decode
-
-_POSTING_COLS = ["term", "first_doc", "n", "doc_deltas", "tfs", "dls"]
+from search_engine_spark.index.codec import bm25_contrib
+from search_engine_spark.serving.postings import PostingLists, rank_topk, read_corpus
 
 
 class WarmIndexReader:
@@ -65,12 +63,9 @@ class WarmIndexReader:
     ):
         self.path = path
         self.cfg = cfg
-        with open(os.path.join(path, "corpus.json")) as f:
-            c = json.load(f)
-        self.corpus_size = int(c["corpus_size"])
-        self.avgdl = float(c["avgdl"])
-        self.k1 = float(c["k1"])
-        self.b = float(c["b"])
+        c, self._idf = read_corpus(path)
+        self.corpus_size, self.avgdl = int(c["corpus_size"]), float(c["avgdl"])
+        self.k1, self.b = float(c["k1"]), float(c["b"])
 
         # doc_dim -> doc_int-indexed arrays (doc_int is dense 0..N-1 by
         # construction, index/build.py assign_dense_ids)
@@ -80,73 +75,21 @@ class WarmIndexReader:
         order = np.argsort(dd.column("doc_int").to_numpy())
         self._doc_ids = dd.column("doc_id").to_pandas().to_numpy()[order]
         self._doc_weights = dd.column("doc_weight").to_numpy()[order].astype(np.float64)
-
-        ts = papq.read_table(os.path.join(path, "term_stats"), columns=["term", "idf"])
-        self._idf = dict(
-            zip(ts.column("term").to_pylist(), ts.column("idf").to_numpy().tolist())
-        )
-
-        self._dataset = pads.dataset(os.path.join(path, "postings"), format="parquet")
-        # term -> list[(first_doc, n, doc_deltas, tfs, dls)]
-        self._blocks_memo: dict[str, list[tuple]] = {}
-        if preload:
-            self._memoize(self._dataset.to_table(columns=_POSTING_COLS))
-            self._all_loaded = True
-        else:
-            self._all_loaded = False
-
-    # ------------------------------------------------------------- loading
-
-    def _memoize(self, tbl) -> None:
-        terms = tbl.column("term").to_pylist()
-        firsts = tbl.column("first_doc").to_pylist()
-        ns = tbl.column("n").to_pylist()
-        deltas = tbl.column("doc_deltas").to_pylist()
-        tfs = tbl.column("tfs").to_pylist()
-        dls = tbl.column("dls").to_pylist()
-        for i, t in enumerate(terms):
-            self._blocks_memo.setdefault(t, []).append(
-                (firsts[i], ns[i], deltas[i], tfs[i], dls[i])
-            )
-
-    def _ensure_terms(self, terms: list[str]) -> None:
-        if self._all_loaded:
-            return
-        missing = [t for t in terms if t not in self._blocks_memo]
-        if not missing:
-            return
-        tbl = self._dataset.to_table(
-            columns=_POSTING_COLS, filter=pads.field("term").isin(missing)
-        )
-        self._memoize(tbl)
-        for t in missing:  # absent from the index: memoize the miss too
-            self._blocks_memo.setdefault(t, [])
-
-    # ------------------------------------------------------------- scoring
+        self._postings = PostingLists(path, preload=preload)
 
     def _score_arrays(self, qtf: dict[str, int]) -> tuple[np.ndarray, np.ndarray]:
         """(scores float64[N], matched bool[N]) — scores are the weighted
         BM25 sums for matched docs (same arithmetic as the Spark decode
-        UDF, index/query.py:210-215, then the sum(contrib)*weight agg)."""
-        k1, b, avgdl = self.k1, self.b, self.avgdl
+        UDF, then the sum(contrib)*weight agg)."""
+        terms = sorted(qtf)
         scores = np.zeros(self.corpus_size, dtype=np.float64)
         matched = np.zeros(self.corpus_size, dtype=bool)
-        for term in sorted(qtf):
-            blocks = self._blocks_memo.get(term, ())
-            if not blocks:
+        for term, (docs, tf, dl) in zip(terms, self._postings.get(terms)):
+            if not docs.size:
                 continue
             mult = float(qtf[term]) * float(self._idf.get(term, 0.0))
-            for first_doc, n, d_deltas, d_tfs, d_dls in blocks:
-                docs = np.empty(n, dtype=np.int64)
-                docs[0] = first_doc
-                if n > 1:
-                    docs[1:] = first_doc + np.cumsum(
-                        varbyte_decode(d_deltas).astype(np.int64)
-                    )
-                tf = varbyte_decode(d_tfs).astype(np.float64)
-                dl = varbyte_decode(d_dls).astype(np.float64)
-                scores[docs] += mult * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
-                matched[docs] = True
+            scores[docs] += bm25_contrib(tf, dl, mult, self.k1, self.b, self.avgdl)
+            matched[docs] = True
         scores[matched] *= self._doc_weights[matched]
         return scores, matched
 
@@ -166,37 +109,13 @@ class WarmIndexReader:
         k = top_k if top_k is not None else cfg.top_k
         ms = min_score if min_score is not None else cfg.min_score
         qtf = dict(Counter(tokens))
-        terms = sorted(qtf)
-        if not terms or self.corpus_size == 0:
+        if not qtf or self.corpus_size == 0:
             return []
-        self._ensure_terms(terms)
         scores, matched = self._score_arrays(qtf)
-
         midx = np.nonzero(matched)[0]
-        cand: list[tuple[int, float]] = []
-        if midx.size:
-            sc = scores[midx]
-            if midx.size > k:
-                # tie-safe selection: keep everything >= the k-th largest
-                # score (ties at the cutoff must be broken by doc_int asc,
-                # which a score-only argpartition would get wrong), then
-                # exact-sort only the survivors
-                thresh = np.partition(sc, midx.size - k)[midx.size - k]
-                keep = sc >= thresh
-                sub_idx, sub_sc = midx[keep], sc[keep]
-            else:
-                sub_idx, sub_sc = midx, sc
-            order = np.lexsort((sub_idx, -sub_sc))[:k]
-            cand = [(int(sub_idx[i]), float(sub_sc[i])) for i in order]
-        positives = sum(1 for _, s in cand if s > 0.0)
-        if positives < k:
-            pad_n = k - positives
-            unmatched = np.nonzero(~matched)[0][:pad_n]
-            cand += [(int(d), 0.0) for d in unmatched]
-        merged = sorted(cand, key=lambda x: (-x[1], x[0]))[:k]
         return [
             (i + 1, self._doc_ids[d].item() if hasattr(self._doc_ids[d], "item") else self._doc_ids[d], s)
-            for i, (d, s) in enumerate(merged)
+            for i, (d, s) in enumerate(rank_topk(midx, scores[midx], k, self.corpus_size))
             if s > ms
         ]
 

@@ -24,13 +24,26 @@ def _local_dir() -> str:
         return "/tmp"
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode driver heap: ~40% of physical RAM, capped at 48g (the
+    driver JVM hosts every executor thread; its off-heap, the Python
+    workers and tmpfs spill need the rest)."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(1, min(48 * 1024, int(kib * 0.4) // 1024))}m"
+
+
 def get_spark(
     app_name: str = "search-engine-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     b = (
         SparkSession.builder.appName(app_name)
@@ -42,9 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: the driver JVM hosts every executor thread — size the
-        # heap for 32 concurrent tasks (the box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

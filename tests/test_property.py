@@ -4,15 +4,22 @@ query tokens, Zipf-ish repetition, unicode punctuation)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from search_engine_spark.config import load_stopwords
+from search_engine_spark.config import EngineConfig
+from search_engine_spark.index.build import _encode_partition_arrow_factory
 from search_engine_spark.index.codec import (
-    decode_block,
-    encode_blocks_for_term,
+    binary_values,
+    decode_blocks,
     varbyte_decode,
     varbyte_encode,
 )
@@ -41,19 +48,130 @@ def test_varbyte_roundtrip(values):
 )
 @settings(max_examples=50, deadline=None)
 def test_block_roundtrip(doc_set, block_size):
+    """The build's Arrow partition encoder, then the batch decode kernel:
+    docs and tfs round-trip, and every block's first_doc, last_doc and n
+    describe its postings."""
     docs = np.array(sorted(doc_set), dtype=np.int64)
     rng = np.random.RandomState(0)
     tfs = rng.randint(1, 1000, size=len(docs)).astype(np.int64)
-    scores = rng.rand(len(docs))
-    blocks = encode_blocks_for_term(docs, tfs, scores, block_size)
-    rd, rt = [], []
-    for (bi, fd, ld, n, dd, tv, mx) in blocks:
-        d, t = decode_block(fd, n, dd, tv)
-        assert d[0] == fd and d[-1] == ld and len(d) == n
-        rd.append(d)
-        rt.append(t)
-    assert np.array_equal(np.concatenate(rd), docs)
-    assert np.array_equal(np.concatenate(rt), tfs)
+    order = rng.permutation(len(docs))  # the encoder sorts the partition itself
+    batch = pa.record_batch(
+        {
+            "term": pa.array(["t"] * len(docs)),
+            "doc_int": docs[order],
+            "tf": tfs[order],
+            "doc_len": tfs[order] + 7,
+            "doc_weight": np.ones(len(docs)),
+            "idf": np.ones(len(docs)),
+            "pid": np.zeros(len(docs), dtype=np.int32),
+        }
+    )
+    encode = _encode_partition_arrow_factory(EngineConfig(block_size=block_size), 10.0)
+    blocks = pa.Table.from_batches(list(encode(iter([batch]))))
+    n = blocks.column("n").to_numpy()
+    d, t, dl = decode_blocks(
+        blocks.column("first_doc").to_numpy(),
+        n,
+        *(binary_values(blocks.column(c)) for c in ("doc_deltas", "tfs", "dls")),
+    )
+    assert np.array_equal(d, docs) and np.array_equal(t, tfs) and np.array_equal(dl, tfs + 7)
+    assert np.all(n >= 1) and np.all(n <= block_size) and n.sum() == len(docs)
+    ends = np.cumsum(n)
+    assert np.array_equal(blocks.column("first_doc").to_numpy(), d[ends - n])
+    assert np.array_equal(blocks.column("last_doc").to_numpy(), d[ends - 1])
+
+
+def _reference_decode(blocks):
+    """Per-block decode, three varbyte calls per block: the loop every
+    reader ran before the batch kernel."""
+    docs, tfs, dls = [], [], []
+    for first, n, dd, tv, lv in blocks:
+        d = np.empty(n, dtype=np.int64)
+        d[0] = first
+        d[1:] = first + np.cumsum(varbyte_decode(dd).astype(np.int64))
+        docs.append(d)
+        tfs.append(varbyte_decode(tv).astype(np.int64))
+        dls.append(varbyte_decode(lv).astype(np.int64))
+    return tuple(np.concatenate(x) for x in (docs, tfs, dls))
+
+
+@st.composite
+def block_batches(draw):
+    """Blocks of several terms, each term's sorted list cut at its own
+    block size (1 gives single-posting blocks with empty doc_deltas),
+    with gaps up to 2^40. -> (blocks, the term of each block)."""
+    blocks, terms = [], []
+    for term in range(draw(st.integers(min_value=1, max_value=6))):
+        gaps = draw(st.lists(st.integers(min_value=1, max_value=2**40), min_size=1, max_size=200))
+        docs = np.cumsum(np.array(gaps, dtype=np.int64)) + draw(st.integers(0, 2**40))
+        tfs = np.array(draw(st.lists(st.integers(1, 2**20), min_size=len(docs), max_size=len(docs))))
+        size = draw(st.integers(min_value=1, max_value=64))
+        for lo in range(0, len(docs), size):
+            d, t = docs[lo : lo + size], tfs[lo : lo + size]
+            blocks.append(
+                (int(d[0]), len(d), varbyte_encode(np.diff(d).astype(np.uint64)),
+                 varbyte_encode(t.astype(np.uint64)), varbyte_encode((t * 3).astype(np.uint64)))
+            )
+            terms.append(f"t{term}")
+    return blocks, terms
+
+
+@given(block_batches(), st.data())
+@settings(max_examples=100, deadline=None)
+def test_decode_blocks_matches_per_block_reference(batch, data):
+    blocks, _ = batch
+    want = _reference_decode(blocks)
+    first = np.array([b[0] for b in blocks])
+    n = np.array([b[1] for b in blocks])
+    joined = [b"".join(b[i] for b in blocks) for i in (2, 3, 4)]
+    got = decode_blocks(first, n, *joined)
+    assert all(np.array_equal(g, w) for g, w in zip(got, want))
+    # the same batch from Arrow binary columns, sliced so offsets start > 0
+    lo = data.draw(st.integers(0, len(blocks) - 1))
+    cols = [pa.array([b""] * 3 + [b[i] for b in blocks], pa.binary()).slice(3) for i in (2, 3, 4)]
+    sub = decode_blocks(first[lo:], n[lo:], *(binary_values(c.slice(lo)) for c in cols))
+    skip = int(n[:lo].sum())
+    assert all(np.array_equal(g, w[skip:]) for g, w in zip(sub, want))
+
+
+def _postings_table(blocks, terms):
+    return pa.table(
+        {
+            "term": terms,
+            "part_id": pa.array([0] * len(blocks), pa.int32()),
+            "first_doc": pa.array([b[0] for b in blocks], pa.int64()),
+            "n": pa.array([b[1] for b in blocks], pa.int32()),
+            **{c: pa.array([b[i] for b in blocks], pa.binary())
+               for c, i in (("doc_deltas", 2), ("tfs", 3), ("dls", 4))},
+        }
+    )
+
+
+@given(block_batches(), st.data())
+@settings(max_examples=40, deadline=None)
+def test_term_split_across_two_files(batch, data):
+    """Blocks cut over two postings files (a cut inside a term's blocks
+    splits that term), read in either file order, preloaded or lazily:
+    every term's list is the union of its halves, never the last file's
+    half alone."""
+    from search_engine_spark.serving.postings import PostingLists
+
+    blocks, terms = batch
+    cut = data.draw(st.integers(0, len(blocks)))
+    flip = data.draw(st.booleans())
+    tbl = _postings_table(blocks, terms)
+    halves = [tbl.slice(0, cut), tbl.slice(cut)]
+    with tempfile.TemporaryDirectory() as root:
+        os.mkdir(os.path.join(root, "postings"))
+        for name, half in zip(("p0.parquet", "p1.parquet"), halves[::-1] if flip else halves):
+            pq.write_table(half, os.path.join(root, "postings", name))
+        for preload in (True, False):
+            lists = PostingLists(root, preload=preload)
+            for term in sorted(set(terms)):
+                want = _reference_decode([b for b, t in zip(blocks, terms) if t == term])
+                (docs, tf, dl), = lists.get([term])
+                order = np.argsort(docs)
+                assert all(np.array_equal(g[order], w) for g, w in zip((docs, tf, dl), want))
 
 
 # ------------------------------------------------------------- indel ratio

@@ -7,8 +7,12 @@ zero-score pad docs outrank negative-scored matches)."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from collections import Counter
 
+import pyarrow as pa
 import pytest
 
 from search_engine_spark.config import EngineConfig
@@ -87,8 +91,9 @@ def test_raw_query_uses_same_tokenizer(cindex, warm_lazy):
 def test_lazy_memo_stable_and_misses_memoized(warm_lazy):
     tokens = ["w0000", "zzqqxx"]
     first = warm_lazy.search_topk(tokens)
-    assert "zzqqxx" in warm_lazy._blocks_memo  # miss memoized, no re-scan
-    assert warm_lazy._blocks_memo["zzqqxx"] == []
+    memo = warm_lazy._postings._lists
+    assert "zzqqxx" in memo  # miss memoized, no re-scan
+    assert all(len(a) == 0 for a in memo["zzqqxx"])
     assert warm_lazy.search_topk(tokens) == first
 
 
@@ -202,9 +207,58 @@ def test_shard_state_is_not_corpus_sized(index_path):
 
 
 def test_preload_reads_every_block(index_path, warm_preload):
+    with open(os.path.join(index_path, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
+    held = sum(len(a[0]) for a in warm_preload._postings._lists.values())
+    assert held == manifest["stages"]["postings"]["postings"]
+
+
+@pytest.fixture(scope="module")
+def split_index(tmp_path_factory, index_path):
+    """A copy of the index whose postings are rewritten into four part
+    files, cut in the middle of the two longest posting lists: the build's
+    (term, doc_int) range partitioning does the same to head terms."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as papq
 
-    n_blocks = papq.read_table(
-        os.path.join(index_path, "postings"), columns=["term"]
-    ).num_rows
-    assert sum(len(b) for b in warm_preload._blocks_memo.values()) == n_blocks
+    path = str(tmp_path_factory.mktemp("split_idx"))
+    shutil.copytree(index_path, path, dirs_exist_ok=True)
+    shutil.rmtree(os.path.join(path, "postings"))
+    os.makedirs(os.path.join(path, "postings"))
+    tbl = papq.read_table(os.path.join(index_path, "postings"))
+    tbl = tbl.take(pc.sort_indices(tbl, [("term", "ascending"), ("first_doc", "ascending")]))
+    terms = tbl.column("term").to_pylist()
+    counts = Counter(terms)
+    heads = [t for t, c in counts.most_common(2) if c >= 2]
+    assert len(heads) == 2, "the index needs two multi-block terms"
+    cuts = sorted({terms.index(t) + counts[t] // 2 for t in heads} | {len(terms) // 2})
+    for part, (lo, hi) in enumerate(zip([0] + cuts, cuts + [len(terms)])):
+        piece = tbl.slice(lo, hi - lo)
+        piece = piece.set_column(
+            piece.schema.get_field_index("part_id"), "part_id",
+            pa.array([part] * piece.num_rows, pa.int32()),
+        )
+        papq.write_table(piece, os.path.join(path, "postings", f"part-{part:05d}.parquet"))
+    return path, heads
+
+
+def test_split_term_readers_agree(index_path, split_index):
+    """A term whose blocks span two part files is served whole by every
+    reader: lazy, preloaded, 1-shard and 3-shard answers are identical to
+    each other and to the reader of the unsplit index."""
+    from search_engine_spark.serving import ShardedWarmReader
+
+    path, heads = split_index
+    want_reader = WarmIndexReader(index_path, CFG, preload=True)
+    readers = [
+        WarmIndexReader(path, CFG, preload=False),
+        WarmIndexReader(path, CFG, preload=True),
+        ShardedWarmReader(path, 1, CFG),
+        ShardedWarmReader(path, 3, CFG),
+    ]
+    queries = [[heads[0]], [heads[1]], heads, [heads[0], "w0003"], ["w0004", heads[1], heads[1]]]
+    for tokens in queries:
+        want = want_reader.search_topk(tokens, top_k=20)
+        assert len(want) == 20
+        for r in readers:
+            assert r.search_topk(tokens, top_k=20) == want, (type(r).__name__, tokens)

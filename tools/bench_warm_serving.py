@@ -5,7 +5,10 @@ answers single queries without any Spark job — the reference's own
 deployment split (prebuilt index held warm by a service,
 reference service/text_search.py:35-53). Reports per-query latency
 percentiles and sustained single-query qps for both load modes, plus
-the cold-start (load) time, printing ONE JSON line.
+the cold-start (load) time and the peak RSS of a fresh interpreter
+serving in that mode (each mode runs in its own child process, so its
+``rss_mb`` is the reader's and the interpreter's alone — the RAM side of
+the preload trade), printing ONE JSON line.
 
 Usage: python tools/bench_warm_serving.py [sf_dir] [--pages N] [--queries M]
 """
@@ -14,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -66,14 +70,14 @@ def run_corpus(spark, df, doc_col, text_col, idx_dir, n_queries, vocab_cap=2000)
         queries.append(query_tokens_py(" ".join(terms)))
 
     out: dict = {"build_sec": round(build_s, 1)}
-    t0 = time.time()
-    lazy = WarmIndexReader(idx_dir, preload=False)
-    out["lazy_load_sec"] = round(time.time() - t0, 2)
-    out["lazy"] = measure(lazy, queries)
-    t0 = time.time()
-    pre = WarmIndexReader(idx_dir, preload=True)
-    out["preload_load_sec"] = round(time.time() - t0, 2)
-    out["preload"] = measure(pre, queries)
+    for mode, preload in (("lazy", False), ("preload", True)):
+        child = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--serve", idx_dir, str(int(preload))],
+            input=json.dumps(queries), capture_output=True, text=True, check=True,
+        )
+        res = json.loads(child.stdout)
+        out[f"{mode}_load_sec"] = res.pop("load_sec")
+        out[mode] = res
 
     # sharded scatter-gather overhead (shards simulated in-process, so this
     # measures protocol overhead — partial-dict gather + doc_id lookup —
@@ -85,7 +89,25 @@ def run_corpus(spark, df, doc_col, text_col, idx_dir, n_queries, vocab_cap=2000)
     return out
 
 
+def serve(idx_dir: str, preload: bool) -> None:
+    """Child process: load the reader, answer the queries read from stdin,
+    print the measurement with this process's peak RSS."""
+    import resource
+
+    from search_engine_spark.serving import WarmIndexReader
+
+    queries = json.load(sys.stdin)
+    t0 = time.time()
+    reader = WarmIndexReader(idx_dir, preload=preload)
+    load_sec = round(time.time() - t0, 2)
+    res = measure(reader, queries)
+    rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+    print(json.dumps({"load_sec": load_sec, **res, "rss_mb": round(rss_mb, 1)}))
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--serve"]:
+        return serve(sys.argv[2], sys.argv[3] == "1")
     import shutil
     import tempfile
 
