@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -213,6 +214,23 @@ def build_postings_local(
     return docs.select(*cols).mapInPandas(count_terms, out_schema)
 
 
+def floored_term_stats(postings: DataFrame, n: int, cfg: EngineConfig) -> tuple[DataFrame, float]:
+    """(term_stats, average_idf) of ``n`` documents' postings: document
+    frequency, then the two-phase epsilon floor (module docstring)."""
+    raw = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).withColumn(
+        "idf_raw", F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
+    )
+    raw = raw.persist(StorageLevel.MEMORY_AND_DISK)  # read by the average and every query
+    avg_row = raw.agg(F.avg("idf_raw").alias("a")).collect()[0]
+    # snap_zero: a cancelled average's float-noise sign is summation-order
+    # dependent and the floor amplifies it into a rank flip (config.py
+    # AVERAGE_IDF_ZERO_TOL; oracle/pyref.py applies the same deadband)
+    average_idf = snap_zero(float(avg_row["a"] or 0.0))
+    floor = cfg.epsilon * average_idf
+    idf = F.when(F.col("idf_raw") < 0, F.lit(floor)).otherwise(F.col("idf_raw"))
+    return raw.select("term", "df", idf.alias("idf")), average_idf
+
+
 def build_bm25_index(
     docs: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
@@ -237,8 +255,6 @@ def build_bm25_index(
     # caller's scoring or encode jobs) — persist once so the
     # tokenize+explode+agg chain (incl. any upstream extraction UDF) is not
     # recomputed per action; spills to disk if it exceeds executor memory
-    from pyspark import StorageLevel
-
     scoring_postings = build_postings_local(
         base, cfg, "doc_id", "text", weight_col="doc_weight"
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -262,23 +278,7 @@ def build_bm25_index(
     ).collect()[0]
     n, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
-    # document frequency + two-phase epsilon-floored idf
-    raw = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).withColumn(
-        "idf_raw", F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
-    )
-    raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    avg_row = raw.agg(F.avg("idf_raw").alias("a")).collect()[0]
-    # snap_zero: a cancelled average's float-noise sign is summation-order
-    # dependent and the floor amplifies it into a rank flip (config.py
-    # AVERAGE_IDF_ZERO_TOL; oracle/pyref.py applies the same deadband)
-    average_idf = snap_zero(float(avg_row["a"] or 0.0))
-    floor = cfg.epsilon * average_idf
-    term_stats = raw.select(
-        "term",
-        "df",
-        F.when(F.col("idf_raw") < 0, F.lit(floor)).otherwise(F.col("idf_raw")).alias("idf"),
-    )
-
+    term_stats, average_idf = floored_term_stats(postings, n, cfg)
     return BM25Index(
         postings=postings,
         doc_stats=doc_stats,

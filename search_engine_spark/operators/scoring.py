@@ -13,9 +13,10 @@ Plan shape (SURVEY.md §3.2): query terms (a tiny DF, broadcast) inner-join
 zero-pad -> TakeOrderedAndProject. The inner join makes the computation
 sparse (only docs containing >=1 query term are touched) while the reference
 scores every document densely; docs it never touches all have score
-doc_weight*0 = 0, so sparse == dense EXCEPT when fewer than k docs match —
-then the reference's top-k contains zero-score docs (J1-note). ``_zero_pad``
-restores those rows only when needed, keeping the common path sparse.
+doc_weight*0 = 0, so sparse == dense EXCEPT when fewer than k docs score
+> 0 — then the reference's top-k contains zero-score docs (J1-note). The
+pad rule (``_short_pad``, or an anti-join when k docs matched) restores
+those rows only when needed, keeping the common path sparse.
 
 Scale notes: the probe side (postings filtered to query terms) is the only
 big relation; Catalyst broadcasts the <=100-row query-term set, the
@@ -77,8 +78,10 @@ def score_query(index: BM25Index, tokens: list[str]) -> DataFrame:
     Serving plan (scoring_postings present — the build_bm25_index default):
     scoring_postings ⋈ broadcast(query terms+idf) -> hash agg -> done. ONE
     shuffle (the doc_id agg), no doc_stats join: doc_len/doc_weight ride in
-    the postings rows, paid once at build. The legacy 3-relation join is
-    kept for hand-assembled indexes (streaming to_bm25_index).
+    the postings rows, paid once at build. Ingest indexes
+    (``IncrementalIndexer.to_bm25_index``) have no scoring_postings: the
+    store keeps doc_len in its docs table, so every query also joins
+    doc_stats on doc_id (a broadcast while it is small, else a shuffle).
     """
     spark = index.postings.sparkSession
     cfg = index.cfg
@@ -124,6 +127,54 @@ def _result_schema(index: BM25Index):
     )
 
 
+def _smallest_ids(index: BM25Index, n: int) -> list:
+    return [r["doc_id"] for r in index.doc_stats.select("doc_id").orderBy("doc_id").limit(n).collect()]
+
+
+def _short_pad(head: list, cands: list[tuple]) -> list:
+    """Pad ids for a query with m < k matched docs, all in ``cands``: its k
+    smallest unmatched ids lie among the corpus's m + k < 2k smallest ids,
+    ``head`` = _smallest_ids(2k), minus the candidates."""
+    seen = {d for d, _ in cands}
+    return [d for d in head if d not in seen]
+
+
+def _dense_topk(cands: list[tuple], pad: list, k: int, ms: float) -> list[tuple]:
+    """[(rank, doc_id, score)]: ``cands`` [(doc_id, score)] plus ``pad`` ids
+    at score 0, by (score desc, doc_id asc), cut at k, strict ``> ms``."""
+    merged = sorted(cands + [(d, 0.0) for d in pad], key=lambda x: (-x[1], x[0]))[:k]
+    return [(i + 1, d, s) for i, (d, s) in enumerate(merged) if s > ms]
+
+
+def _batch_scores(index: BM25Index, qt: DataFrame) -> DataFrame:
+    """(query_id, doc_id, score) of each matched doc of each query in ``qt``."""
+    idf = F.broadcast(index.term_stats.select("term", "idf"))
+    if index.scoring_postings is not None:
+        contrib = index.scoring_postings.join(F.broadcast(qt), "term").join(idf, "term")
+    else:
+        contrib = index.postings.join(F.broadcast(qt), "term").join(idf, "term")
+        contrib = contrib.join(index.doc_stats, "doc_id")
+    return (
+        contrib.select("query_id", "doc_id", "doc_weight", _bm25_part(index.cfg, index.avgdl))
+        .groupBy("query_id", "doc_id")
+        .agg((F.sum("part") * F.first("doc_weight")).alias("score"))
+    )
+
+
+def _first_k_per_query(df: DataFrame, k: int, *order) -> DataFrame:
+    """The first k rows of each query_id under ``order``; Spark plans it as
+    a partial WindowGroupLimit in each map task, then the final window
+    (for k <= spark.sql.optimizer.windowGroupLimitThreshold, 1000)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _batch_candidates(index: BM25Index, qt: DataFrame, k: int) -> DataFrame:
+    return _first_k_per_query(_batch_scores(index, qt), k, F.col("score").desc(), F.col("doc_id").asc())
+
+
 def batch_search_topk(
     index: BM25Index,
     queries: list[tuple[int, list[str]]],
@@ -132,117 +183,53 @@ def batch_search_topk(
 ) -> DataFrame:
     """(query_id, rank, doc_id, score): top-k for MANY queries in one plan.
 
-    The batch shape is where the engine beats a serving loop: one broadcast
-    of the (query_id, term, qtf) relation against postings, one hash
-    aggregation keyed (query_id, doc_id), one rank window per query — k
-    results per query regardless of batch size, entirely as DataFrame ops
-    (no driver-side merging, unlike the single-query latency path).
+    One broadcast of the (query_id, term, qtf) relation against postings,
+    one hash aggregation keyed (query_id, doc_id) and one ``row_number()
+    <= k`` window per query, which Spark plans as a partial
+    WindowGroupLimit in every map task below the exchange: no reducer sees
+    more than k rows per query per map task, however many docs a head term
+    matches. The <= k x |Q| candidates are merged on the driver as in
+    ``search_topk`` and returned as a local DataFrame; queries without
+    tokens return no rows.
 
-    Dense semantics (J1-note) are preserved per query: queries with fewer
-    than k positive-score matches are padded with the smallest unmatched
-    doc_ids at score 0 via a per-deficient-query anti-join — never a full
-    queries x docs cross join.
-
-    Scale shape: every per-query top-k here is TWO-LEVEL — a partial top-k
-    per (query_id, shard) where shard = hash(doc_id) % P, then a final
-    top-k over the <= k*P survivors per query. No reducer ever sees more
-    than ~rows/P rows for one query (a head-term query matching 10^9 docs,
-    or one OOV query padding against 10^12 doc_ids, is spread over P
-    reducers), at the cost of one extra narrow window over k*P rows. The
-    two levels agree exactly: the global k best of a partition-wise union
-    of k-best sets is the global k best.
+    Dense semantics (J1-note) per query: a query with m < k candidates has
+    all its matches among them, so its zero-score pad comes from the
+    corpus's 2k smallest ids, one job shared by all such queries. Only a
+    query with k candidates and fewer than k positive scores (average_idf
+    <= 0 or doc_weight <= 0) needs the anti-join of the corpus against its
+    matches, planned for those queries alone.
     """
-    from pyspark.sql.window import Window
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    cfg = index.cfg
-    k = top_k if top_k is not None else cfg.top_k
-    ms = min_score if min_score is not None else cfg.min_score
+    k = top_k if top_k is not None else index.cfg.top_k
+    ms = min_score if min_score is not None else index.cfg.min_score
     spark = index.postings.sparkSession
-    shards = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    schema = StructType([StructField("query_id", LongType(), False), *_result_schema(index).fields])
+    qrows = [(qid, t, int(c)) for qid, tokens in queries for t, c in sorted(Counter(tokens).items())]
+    qids = sorted({q for q, _, _ in qrows})
+    if not qids:
+        return _local_df(spark, [], schema)
+    qcols = "query_id long, term string, qtf int"
+    cands: dict[int, list[tuple]] = {q: [] for q in qids}
+    for r in _batch_candidates(index, _local_df(spark, qrows, qcols), k).collect():
+        cands[r["query_id"]].append((r["doc_id"], float(r["score"])))
 
-    qrows = []
-    for qid, tokens in queries:
-        for t, c in sorted(Counter(tokens).items()):
-            qrows.append((qid, t, int(c)))
-    if not qrows:
-        doc_field = index.doc_stats.schema["doc_id"]
-        from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
-
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("query_id", LongType(), False),
-                    StructField("rank", IntegerType(), False),
-                    StructField("doc_id", doc_field.dataType, doc_field.nullable),
-                    StructField("score", DoubleType(), False),
-                ]
-            ),
+    short = [q for q in qids if len(cands[q]) < k]
+    head = _smallest_ids(index, 2 * k) if short else []
+    pad = {q: _short_pad(head, cands[q]) for q in short}
+    full = {q for q in qids if len(cands[q]) == k and sum(s > 0.0 for _, s in cands[q]) < k}
+    if full:
+        qt = _local_df(spark, [r for r in qrows if r[0] in full], qcols)
+        matched = _batch_scores(index, qt).select("query_id", "doc_id")
+        unmatched = (
+            F.broadcast(qt.select("query_id").distinct())
+            .crossJoin(index.doc_stats.select("doc_id"))
+            .join(matched, ["query_id", "doc_id"], "left_anti")
         )
-    qt = _local_df(spark, qrows, "query_id long, term string, qtf int")
-
-    if index.scoring_postings is not None:
-        contrib = (
-            index.scoring_postings.join(F.broadcast(qt), "term")
-            .join(F.broadcast(index.term_stats.select("term", "idf")), "term")
-            .select("query_id", "doc_id", "doc_weight", _bm25_part(cfg, index.avgdl))
-        )
-    else:
-        contrib = (
-            index.postings.join(F.broadcast(qt), "term")
-            .join(F.broadcast(index.term_stats.select("term", "idf")), "term")
-            .join(index.doc_stats, "doc_id")
-            .select("query_id", "doc_id", "doc_weight", _bm25_part(cfg, index.avgdl))
-        )
-    scored = contrib.groupBy("query_id", "doc_id").agg(
-        (F.sum("part") * F.first("doc_weight")).alias("score")
-    )
-    shard = F.pmod(F.hash("doc_id"), F.lit(shards))
-    w_local = Window.partitionBy("query_id", "_shard").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    topk = (
-        scored.withColumn("_shard", shard)
-        .withColumn("rn_l", F.row_number().over(w_local))
-        .filter(F.col("rn_l") <= k)  # <= k*P rows per query survive level 1
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("_shard", "rn_l")
-    )
-
-    # per-query positive counts -> deficient queries need zero-padding
-    pos = (
-        topk.filter(F.col("score") > 0)
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("npos"))
-    )
-    all_q = qt.select("query_id").distinct()
-    deficient = (
-        all_q.join(pos, "query_id", "left")
-        .select("query_id", F.coalesce("npos", F.lit(0)).alias("npos"))
-        .filter(F.col("npos") < k)
-    )
-    w_pad_local = Window.partitionBy("query_id", "_shard").orderBy(F.col("doc_id").asc())
-    w_pad = Window.partitionBy("query_id").orderBy(F.col("doc_id").asc())
-    pad = (
-        F.broadcast(deficient)
-        .crossJoin(index.doc_stats.select("doc_id"))
-        .join(scored.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti")
-        .withColumn("_shard", shard)
-        .withColumn("rn_l", F.row_number().over(w_pad_local))
-        .filter(F.col("rn_l") <= k)  # pad need is < k, so k per shard suffices
-        .withColumn("rn", F.row_number().over(w_pad))
-        .filter(F.col("rn") <= k - F.col("npos"))
-        .select("query_id", "doc_id", F.lit(0.0).alias("score"))
-    )
-    merged = topk.select("query_id", "doc_id", "score").unionByName(pad)
-    final = (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") <= k) & (F.col("score") > F.lit(ms)))
-        .select("query_id", "rank", "doc_id", "score")
-    )
-    return final
+        for r in _first_k_per_query(unmatched, k, F.col("doc_id").asc()).collect():
+            pad.setdefault(r["query_id"], []).append(r["doc_id"])
+    out = [(q, *row) for q in qids for row in _dense_topk(cands[q], pad.get(q, []), k, ms)]
+    return _local_df(spark, out, schema)
 
 
 def search_topk(
@@ -260,9 +247,11 @@ def search_topk(
     with negative scores (possible when average_idf < 0 pushes the epsilon
     floor negative) and fills out top-k when fewer than k docs match. The
     sparse plan reproduces this by collecting the k best matched docs, and —
-    only when fewer than k of them score > 0 — fetching the (k - positives)
-    smallest unmatched doc_ids as zero-score candidates (left-anti join +
-    TakeOrdered), then merging the <= 2k candidate rows driver-side. The
+    only when fewer than k of them score > 0 — zero-score pad candidates:
+    with fewer than k matched docs, the corpus's 2k smallest ids minus the
+    matched ones (``_short_pad``); with k matched docs, the k smallest
+    unmatched ids by a left-anti join + TakeOrdered. The candidates merge
+    driver-side (``_dense_topk``, shared with ``batch_search_topk``). The
     common case (k positive matches) stays a single distributed job.
     """
     cfg = index.cfg
@@ -281,22 +270,20 @@ def search_topk(
         .orderBy(F.col("doc_id").asc())
         .limit(k)  # k smallest unmatched ids always cover any pad need < k
     )
+    pad = []
     if index.corpus_size > 0 and index.max_idf() <= 0 and index.min_doc_weight() >= 0:
         # no document can score > 0 (all floored idfs are <= 0), so the
         # dense zero-pad ALWAYS fires — run top-k and pad candidates as ONE
         # fused job (the `scored` subtree is shared via exchange reuse)
         # instead of collect-then-pad's two sequential jobs.
-        top_rows = [
+        cands = [
             (r["doc_id"], float(r["score"]))
             for r in topc.select("doc_id", "score").unionByName(pad_plan).collect()
         ]
     else:
-        top_rows = [(r["doc_id"], float(r["score"])) for r in topc.collect()]
-        positives = sum(1 for _, s in top_rows if s > 0.0)
-        if positives < k and index.corpus_size > 0:
-            top_rows += [(r["doc_id"], 0.0) for r in pad_plan.limit(k - positives).collect()]
-    merged = sorted(top_rows, key=lambda x: (-x[1], x[0]))[:k]
-    out = [
-        (i + 1, d, s) for i, (d, s) in enumerate(merged) if s > ms
-    ]
-    return _local_df(spark, out, schema)
+        cands = [(r["doc_id"], float(r["score"])) for r in topc.collect()]
+        if len(cands) < k:
+            pad = _short_pad(_smallest_ids(index, 2 * k), cands)
+        elif sum(s > 0.0 for _, s in cands) < k:
+            pad = [r["doc_id"] for r in pad_plan.collect()]
+    return _local_df(spark, _dense_topk(cands, pad, k, ms), schema)

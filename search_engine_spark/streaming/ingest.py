@@ -23,11 +23,16 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from search_engine_spark.operators.corpus_stats import BM25Index, build_postings_local
+from search_engine_spark.operators.corpus_stats import (
+    BM25Index,
+    build_postings_local,
+    floored_term_stats,
+)
 
 
 class IncrementalIndexer:
@@ -76,22 +81,31 @@ class IncrementalIndexer:
         if batch_id in st["batches"]:
             return  # exactly-once: batch was already applied AND recorded
         batch_df = batch_df.filter(F.length(F.trim(F.col(text_col))) > 0)
+        # tokenized once: the postings write and the doc lengths both read it
         postings = build_postings_local(batch_df, self.cfg, doc_col, text_col)
-        # overwrite into a batch-scoped subdir: a replay after a crash that
-        # happened before the batch was recorded REPLACES the partial files
-        postings.write.mode("overwrite").parquet(
-            os.path.join(self.path, "postings", f"batch={int(batch_id)}")
+        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+        docs_dir = os.path.join(self.path, "docs", f"batch={int(batch_id)}")
+        try:
+            # overwrite into a batch-scoped subdir: a replay after a crash that
+            # happened before the batch was recorded REPLACES the partial files
+            postings.write.mode("overwrite").parquet(
+                os.path.join(self.path, "postings", f"batch={int(batch_id)}")
+            )
+            dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+            docs = (
+                batch_df.select(F.col(doc_col).alias("doc_id"))
+                .join(dl, "doc_id", "left")
+                .select("doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"))
+            )
+            docs.write.mode("overwrite").parquet(docs_dir)
+        finally:
+            postings.unpersist()
+        # the scalars from the written rows, not a third run of the join
+        agg = (
+            self.spark.read.parquet(docs_dir)
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("s"))
+            .collect()[0]
         )
-        dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-        docs = (
-            batch_df.select(F.col(doc_col).alias("doc_id"))
-            .join(dl, "doc_id", "left")
-            .select("doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"))
-        )
-        docs.write.mode("overwrite").parquet(
-            os.path.join(self.path, "docs", f"batch={int(batch_id)}")
-        )
-        agg = docs.agg(F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("s")).collect()[0]
         st["n_docs"] += int(agg["n"])
         st["sum_doc_len"] += int(agg["s"] or 0)
         st["batches"].append(batch_id)
@@ -133,16 +147,7 @@ class IncrementalIndexer:
         doc_stats = docs.select("doc_id", "doc_len", F.lit(1.0).alias("doc_weight"))
         n = st["n_docs"]
         avgdl = (st["sum_doc_len"] / n) if n else 0.0
-        raw = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).withColumn(
-            "idf_raw",
-            F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5),
-        ).cache()
-        average_idf = float(raw.agg(F.avg("idf_raw")).collect()[0][0] or 0.0)
-        floor = self.cfg.epsilon * average_idf
-        term_stats = raw.select(
-            "term", "df",
-            F.when(F.col("idf_raw") < 0, F.lit(floor)).otherwise(F.col("idf_raw")).alias("idf"),
-        )
+        term_stats, average_idf = floored_term_stats(postings, n, self.cfg)
         return BM25Index(
             postings=postings, doc_stats=doc_stats, term_stats=term_stats,
             corpus_size=n, avgdl=avgdl, average_idf=average_idf, cfg=self.cfg,

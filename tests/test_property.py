@@ -277,3 +277,29 @@ def test_bm25_rank_parity_when_average_idf_cancels(spark):
         assert [u for u, _ in got] == [u for u, _ in want], query
         for (_, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, abs=1e-9)
+
+
+@pytest.mark.parametrize("split", [[4], [2, 2], [1, 3], [1, 1, 1, 1]])
+def test_ingest_average_idf_snaps_to_zero_on_cancelling_corpus(spark, tmp_path, split):
+    """The incremental store takes the same snapped average as the batch
+    build, however the corpus arrives in micro-batches."""
+    from search_engine_spark.operators.scoring import batch_search_topk
+    from search_engine_spark.streaming.ingest import IncrementalIndexer
+
+    ix = IncrementalIndexer(spark, str(tmp_path / "store"))
+    lo = 0
+    for b, n in enumerate(split):
+        part = spark.createDataFrame(CANCELLING_CORPUS[lo : lo + n], "doc_id string, text string")
+        ix.process_batch(part, b, doc_col="doc_id")
+        lo += n
+    idx = ix.to_bm25_index()
+    assert idx.average_idf == 0.0
+    oidx = build_oracle_index(CANCELLING_CORPUS, load_stopwords())
+    queries = ["aa", "aa uu", "uu", "zzqqxx"]
+    rows = batch_search_topk(idx, [(i, q.split()) for i, q in enumerate(queries)]).collect()
+    for i, q in enumerate(queries):
+        got = sorted((r["rank"], r["doc_id"], r["score"]) for r in rows if r["query_id"] == i)
+        want = oracle_search(oidx, q, use_fuzzy=False)
+        assert [d for _, d, _ in got] == [u for u, _ in want], (split, q)
+        for (_, _, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9), (split, q)
