@@ -31,10 +31,6 @@ import io
 import re
 import zlib
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
 _WS_RE = re.compile(r"\s+")
 
 
@@ -308,8 +304,3 @@ def extract_pdf_text_py(payload: bytes | None) -> str:
     except Exception:
         return ""
     return _WS_RE.sub(" ", text).strip()
-
-
-@pandas_udf(StringType())
-def extract_pdf_text_udf(payload: pd.Series) -> pd.Series:
-    return payload.map(extract_pdf_text_py)

@@ -53,8 +53,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig, snap_zero
+from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.index.codec import bm25_contrib, varbyte_encode_with_lengths
+from search_engine_spark.operators.corpus_stats import (
+    build_postings_local,
+    doc_lengths,
+    floored_term_stats,
+)
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -288,48 +293,6 @@ def _save_manifest(path: str, m: dict) -> None:
     os.replace(tmp, _manifest_path(path))
 
 
-def tokenize_count_with_stats(
-    docs_int: DataFrame,
-    cfg: EngineConfig,
-    text_col: str = "text",
-    weight_col: str = "doc_weight",
-) -> DataFrame:
-    """(doc_int, term, tf, doc_len, doc_weight) in ONE Arrow pass — no
-    posting-level join anywhere: doc_len (post-filter token count) and the
-    doc weight ride along with every posting, so the encode stage needs
-    only a broadcast of per-term idf. Tokenization + counting run through
-    the vectorized ``count_terms_arrays`` kernel (reference semantics
-    exactly; all per-token work in C)."""
-    from search_engine_spark.functions.tokenize import count_terms_arrays
-
-    stop = cfg.stopwords
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows, terms, tf, doc_len = count_terms_arrays(pdf[text_col], stop)
-            if len(rows) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_int": pdf["doc_int"].to_numpy()[rows],
-                    "term": terms,
-                    "tf": tf.astype("int32"),
-                    "doc_len": doc_len[rows].astype("int32"),
-                    "doc_weight": pdf[weight_col].to_numpy(dtype=np.float64)[rows],
-                }
-            )
-
-    # doc_len as int32: a per-doc token count always fits, and the posting
-    # relation is shuffled + Arrow-piped at posting scale — 4 bytes/row saved
-    # is ~160 MB per 40M postings
-    return docs_int.select("doc_int", text_col, weight_col).mapInPandas(
-        run, "doc_int long, term string, tf int, doc_len int, doc_weight double"
-    )
-
-
 def build_compressed_index(
     docs: DataFrame,
     path: str,
@@ -343,17 +306,22 @@ def build_compressed_index(
     Returns the manifest. Stages already recorded in the manifest for the
     SAME input snapshot digest are skipped — resumable builds.
 
-    Dataflow (shuffle inventory — every shuffle justified):
+    Dataflow (shuffle inventory — every shuffle justified). The corpus
+    statistics take the logical index's one path in operators/corpus_stats
+    (``build_postings_local`` -> ``doc_lengths`` -> ``floored_term_stats``):
       1. dense-id assignment: ONE doc-level range shuffle of the full doc
          table (rows = docs) — ids are assigned in place, so the text
          column crosses exactly one exchange and there is NO join-back
-      2. postings: mapInPandas, partition-local (rows = postings, NO
-         shuffle), written to a parquet staging table: three downstream
-         jobs (df/idf, doc_stats, encode) re-read a column-pruned snappy
-         file instead of rebuilding/holding a 40M-row columnar cache
-      3. df/idf + corpus scalars: groupBy(term)/agg with map-side partial
-         aggregation (shuffled rows ~ |V| x partitions, tiny)
-      4. doc_stats: doc-level join on doc_int (rows = docs)
+      2. postings: ``build_postings_local`` keyed by doc_int,
+         partition-local (rows = postings, NO shuffle), written to a
+         parquet staging table: three downstream jobs (df/idf, doc_stats,
+         encode) re-read a column-pruned snappy file instead of
+         rebuilding/holding a 40M-row columnar cache
+      3. doc_stats: ``doc_lengths``, a doc-level join on doc_int
+         (rows = docs)
+      4. df/idf + corpus scalars: ``floored_term_stats``, groupBy(term)/agg
+         with map-side partial aggregation (shuffled rows ~ |V| x
+         partitions, tiny)
       5. encode: ONE posting-level range shuffle on (term, doc_int) — the
          irreducible one that gives the index its global term-sorted order
          (head terms span partitions; parquet min/max prunes queries).
@@ -406,49 +374,24 @@ def build_compressed_index(
     staging_dir = os.path.join(path, "_staging_postings")
     if not (stage_done("staging") and os.path.isdir(staging_dir)):
         t0 = time.time()
-        tokenize_count_with_stats(docs_int, cfg, "text", "doc_weight").write.mode(
-            "overwrite"
-        ).parquet(staging_dir)
+        build_postings_local(
+            docs_int, cfg, "doc_int", "text", weight_col="doc_weight"
+        ).withColumnRenamed("doc_id", "doc_int").write.mode("overwrite").parquet(staging_dir)
         record("staging", t0)
     postings = spark.read.parquet(staging_dir)
 
-    # doc stats (incl. zero-token docs) + corpus scalars; doc_lens is also
-    # doc-scale -> same explicit non-broadcast strategy
-    doc_lens = postings.groupBy("doc_int").agg(F.first("doc_len").alias("dl"))
+    # doc stats (incl. zero-token docs) + corpus scalars
     doc_stats = (
-        docs_int.select("doc_id", "doc_int", "doc_weight")
-        .join(doc_lens.hint("merge"), "doc_int", "left")
-        .select(
-            "doc_id",
-            "doc_int",
-            F.coalesce("dl", F.lit(0)).cast("long").alias("doc_len"),
-            "doc_weight",
-        )
+        doc_lengths(docs_int.select("doc_id", "doc_int", "doc_weight"), postings, key="doc_int")
+        .select("doc_id", "doc_int", "doc_len", "doc_weight")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     row = doc_stats.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")).collect()[0]
     n, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
-    raw = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn(
-            "idf_raw", F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # snap_zero: same cancelled-average deadband as the logical index
-    # (config.AVERAGE_IDF_ZERO_TOL); corpus.json persists the snapped value
-    # so CompressedIndex / warm & sharded readers inherit it
-    average_idf = snap_zero(
-        float(raw.agg(F.avg("idf_raw").alias("a")).collect()[0]["a"] or 0.0)
-    )
-    floor = cfg.epsilon * average_idf
-    term_stats = raw.select(
-        "term",
-        "df",
-        F.when(F.col("idf_raw") < 0, F.lit(floor)).otherwise(F.col("idf_raw")).alias("idf"),
-    )
+    # the snapped average_idf goes to corpus.json, so CompressedIndex and
+    # the warm & sharded readers inherit the logical index's deadband
+    term_stats, average_idf = floored_term_stats(postings, n, cfg, cache_handles)
 
     if not stage_done("doc_dim"):
         t0 = time.time()
@@ -458,7 +401,7 @@ def build_compressed_index(
     if not stage_done("term_stats"):
         t0 = time.time()
         term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
-        record("term_stats", t0, rows=int(raw.count()))  # cached, no re-read
+        record("term_stats", t0, rows=int(term_stats.count()))  # cached, no re-read
 
     if not stage_done("corpus"):
         t0 = time.time()
@@ -532,7 +475,6 @@ def build_compressed_index(
         )
 
     doc_stats.unpersist()
-    raw.unpersist()
     for h in cache_handles:
         h.unpersist()
     _cleanup_staging(path, stages)

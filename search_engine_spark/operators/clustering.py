@@ -86,18 +86,6 @@ def custom_tokenize_py(text: str) -> list[str]:
     return [w for w in words if token_filter_py(w)]
 
 
-def custom_tokenizer_udf():
-    """Arrow-vectorized pandas UDF wrapping ``custom_tokenize_py``."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, StringType
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def run(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: custom_tokenize_py(t or ""))
-
-    return run
-
-
 def doc_token_arrays(
     docs: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,

@@ -29,6 +29,15 @@ The epsilon IDF floor needs a two-phase aggregate: average_idf is computed
 over the RAW idfs of the entire vocabulary (negatives included, divided by
 |V|) and then negative idfs are replaced by epsilon*average_idf — reference
 utils/bm250kapi_weighted.py:35-54.
+
+This module is the one owner of these statistics. The logical index
+(``build_bm25_index``), the materialized index
+(``index/build.build_compressed_index``) and the ingest store
+(``streaming/ingest.IncrementalIndexer``) all take the same path:
+``build_postings_local`` (tf and post-filter doc_len per posting),
+``doc_lengths`` (doc_len per document, 0 when it has no postings) and
+``floored_term_stats`` (df, raw idf, the ``snap_zero`` average and the
+floor).
 """
 
 from __future__ import annotations
@@ -74,6 +83,9 @@ class BM25Index:
     # vocabulary). Bounded by distinct QUERIED terms (not |V|) and hard-
     # capped; misses are one pruned filter+collect over term_stats.
     _idf_memo: dict = field(default_factory=dict, repr=False)
+    # relations persisted on the way to the fields above (floored_term_stats'
+    # df relation): unpersist() releases them too
+    _handles: list = field(default_factory=list, repr=False)
 
     _IDF_MEMO_CAP = 200_000
 
@@ -123,7 +135,7 @@ class BM25Index:
         return self
 
     def unpersist(self) -> None:
-        for df in (self.postings, self.doc_stats, self.term_stats):
+        for df in (self.postings, self.doc_stats, self.term_stats, *self._handles):
             df.unpersist()
         if self.scoring_postings is not None:
             self.scoring_postings.unpersist()
@@ -179,7 +191,10 @@ def build_postings_local(
     partition-local sum (no join, no shuffle — a doc's tokens never leave
     its row) and doc_weight is carried through from the input. This is the
     serving relation BM25Index.scoring_postings — queries score without a
-    doc_stats join.
+    doc_stats join — and the compressed build's staging table. doc_len is
+    int32: a per-doc token count always fits, and the relation is shuffled
+    and Arrow-piped at posting scale (4 bytes a row is ~160 MB per 40M
+    postings).
     """
     from search_engine_spark.functions.tokenize import count_terms_arrays
 
@@ -188,7 +203,7 @@ def build_postings_local(
         f"doc_id {docs.schema[doc_col].dataType.simpleString()}, term string, tf int"
     )
     if weight_col is not None:
-        out_schema += ", doc_len long, doc_weight double"
+        out_schema += ", doc_len int, doc_weight double"
 
     def count_terms(batches):
         import numpy as np
@@ -206,7 +221,7 @@ def build_postings_local(
                 }
             )
             if weight_col is not None:
-                g["doc_len"] = doc_len[rows]
+                g["doc_len"] = doc_len[rows].astype("int32")
                 g["doc_weight"] = pdf[weight_col].to_numpy(dtype=np.float64)[rows]
             yield g
 
@@ -214,13 +229,32 @@ def build_postings_local(
     return docs.select(*cols).mapInPandas(count_terms, out_schema)
 
 
-def floored_term_stats(postings: DataFrame, n: int, cfg: EngineConfig) -> tuple[DataFrame, float]:
+def doc_lengths(docs: DataFrame, postings: DataFrame, key: str = "doc_id") -> DataFrame:
+    """``docs`` plus ``doc_len`` = sum(tf) of the document's postings, 0
+    for a document with none (all its tokens filtered).
+
+    doc_len is doc-scale: explicit sort-merge join (Catalyst's size
+    estimate through the agg is unreliable, and an auto-broadcast of a
+    doc-scale side aborted on driver maxResultSize at 2M docs)."""
+    dl = postings.groupBy(key).agg(F.sum("tf").alias("dl"))
+    return docs.join(dl.hint("merge"), key, "left").select(
+        *docs.columns, F.coalesce("dl", F.lit(0)).cast("long").alias("doc_len")
+    )
+
+
+def floored_term_stats(
+    postings: DataFrame, n: int, cfg: EngineConfig, handles: list | None = None
+) -> tuple[DataFrame, float]:
     """(term_stats, average_idf) of ``n`` documents' postings: document
-    frequency, then the two-phase epsilon floor (module docstring)."""
+    frequency, then the two-phase epsilon floor (module docstring).
+    ``handles`` (if given) receives the persisted (term, df, idf_raw)
+    relation, for the caller to unpersist after its last read."""
     raw = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).withColumn(
         "idf_raw", F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
     )
     raw = raw.persist(StorageLevel.MEMORY_AND_DISK)  # read by the average and every query
+    if handles is not None:
+        handles.append(raw)
     avg_row = raw.agg(F.avg("idf_raw").alias("a")).collect()[0]
     # snap_zero: a cancelled average's float-noise sign is summation-order
     # dependent and the floor amplifies it into a rank flip (config.py
@@ -260,15 +294,9 @@ def build_bm25_index(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     postings = scoring_postings.drop("doc_len", "doc_weight")
 
-    # doc_len is doc-scale: explicit sort-merge join (Catalyst's size
-    # estimate through the agg is unreliable and an auto-broadcast of a
-    # doc-scale side aborts on driver maxResultSize — seen at 2M docs on
-    # the compressed-build twin of this join, index/build.py)
-    doc_len = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     doc_stats = (
-        base.select("doc_id", "doc_weight")
-        .join(doc_len.hint("merge"), "doc_id", "left")
-        .select("doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"), "doc_weight")
+        doc_lengths(base.select("doc_id", "doc_weight"), postings)
+        .select("doc_id", "doc_len", "doc_weight")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -278,7 +306,8 @@ def build_bm25_index(
     ).collect()[0]
     n, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
-    term_stats, average_idf = floored_term_stats(postings, n, cfg)
+    handles: list = []
+    term_stats, average_idf = floored_term_stats(postings, n, cfg, handles)
     return BM25Index(
         postings=postings,
         doc_stats=doc_stats,
@@ -288,4 +317,5 @@ def build_bm25_index(
         average_idf=average_idf,
         cfg=cfg,
         scoring_postings=scoring_postings,
+        _handles=handles,
     )

@@ -122,6 +122,21 @@ def minhash_signatures_from_terms(
     )
 
 
+def lsh_band_keys(signatures: DataFrame, rows_per_band: int = 2) -> DataFrame:
+    """(doc_id, band, band_key): each run of ``rows_per_band`` minhashes,
+    in hash order, joined into one string bucket key."""
+    banded = signatures.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
+    return banded.groupBy("doc_id", "band").agg(
+        F.array_join(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("h", "minhash"))),
+                lambda s: s["minhash"].cast("string"),  # works for hex or int64 hashes
+            ),
+            ",",
+        ).alias("band_key")
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, rows_per_band: int = 2, max_bucket_size: int | None = None
 ) -> DataFrame:
@@ -147,18 +162,7 @@ def lsh_candidate_pairs(
     identical documents — whose buckets all explode together — are the
     exact-dedup family's job, which ``curate_docs`` runs FIRST. Default None
     preserves exhaustive semantics for oracle parity."""
-    banded = signatures.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
-    band_keys = _persist_tracked(
-        banded.groupBy("doc_id", "band").agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("h", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),  # works for hex or int64 hashes
-                ),
-                ",",
-            ).alias("band_key")
-        )
-    )
+    band_keys = _persist_tracked(lsh_band_keys(signatures, rows_per_band))
     if max_bucket_size is not None:
         from pyspark.sql import Window
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.config import DEFAULT_CONFIG, load_stopwords
 from search_engine_spark.functions.tokenize import query_tokens_py
-from search_engine_spark.operators.corpus_stats import build_bm25_index, build_postings
+from search_engine_spark.operators.corpus_stats import build_bm25_index, build_postings, doc_lengths
 from search_engine_spark.operators.dedup import (
     exact_fingerprints,
     minhash_dup_pairs,
@@ -72,11 +72,7 @@ def q_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
-    p = build_postings(docs, CFG, "doc_id", "text")
-    dl = p.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    return docs.select("doc_id").join(dl, "doc_id", "left").select(
-        "doc_id", F.coalesce("dl", F.lit(0)).cast("long").alias("doc_len")
-    )
+    return doc_lengths(docs.select("doc_id"), build_postings(docs, CFG, "doc_id", "text"))
 
 
 def q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

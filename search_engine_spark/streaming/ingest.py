@@ -31,6 +31,7 @@ from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.operators.corpus_stats import (
     BM25Index,
     build_postings_local,
+    doc_lengths,
     floored_term_stats,
 )
 
@@ -91,12 +92,7 @@ class IncrementalIndexer:
             postings.write.mode("overwrite").parquet(
                 os.path.join(self.path, "postings", f"batch={int(batch_id)}")
             )
-            dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-            docs = (
-                batch_df.select(F.col(doc_col).alias("doc_id"))
-                .join(dl, "doc_id", "left")
-                .select("doc_id", F.coalesce("doc_len", F.lit(0)).cast("long").alias("doc_len"))
-            )
+            docs = doc_lengths(batch_df.select(F.col(doc_col).alias("doc_id")), postings)
             docs.write.mode("overwrite").parquet(docs_dir)
         finally:
             postings.unpersist()
@@ -147,10 +143,12 @@ class IncrementalIndexer:
         doc_stats = docs.select("doc_id", "doc_len", F.lit(1.0).alias("doc_weight"))
         n = st["n_docs"]
         avgdl = (st["sum_doc_len"] / n) if n else 0.0
-        term_stats, average_idf = floored_term_stats(postings, n, self.cfg)
+        handles: list = []
+        term_stats, average_idf = floored_term_stats(postings, n, self.cfg, handles)
         return BM25Index(
             postings=postings, doc_stats=doc_stats, term_stats=term_stats,
             corpus_size=n, avgdl=avgdl, average_idf=average_idf, cfg=self.cfg,
+            _handles=handles,
         )
 
 

@@ -20,9 +20,22 @@ CFG = EngineConfig(block_size=16, index_partitions=8)  # small blocks -> many
 
 
 @pytest.fixture(scope="module")
-def index_path(tmp_path_factory, tiny_pages):
+def pages(spark, tiny_pages):
+    """The tiny corpus plus an all-stopword doc (doc_len 0): every synth
+    page's text carries its title, so the tiny corpus has none."""
+    stop = spark.createDataFrame(
+        [("https://synth.example/stopwords.html", "the and of to a")], "url string, text string"
+    )
+    df = tiny_pages.select("url", "text").unionByName(stop).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def index_path(tmp_path_factory, pages):
     path = str(tmp_path_factory.mktemp("cindex"))
-    build_compressed_index(tiny_pages, path, CFG, doc_col="url", text_col="text")
+    build_compressed_index(pages, path, CFG, doc_col="url", text_col="text")
     return path
 
 
@@ -32,8 +45,8 @@ def cindex(spark, index_path):
 
 
 @pytest.fixture(scope="module")
-def logical(tiny_pages):
-    return build_bm25_index(tiny_pages, CFG, doc_col="url", text_col="text").cache()
+def logical(pages):
+    return build_bm25_index(pages, CFG, doc_col="url", text_col="text").cache()
 
 
 def test_manifest_complete(index_path):
@@ -48,6 +61,17 @@ def test_manifest_complete(index_path):
 def test_scalars_match(cindex, logical):
     assert cindex.corpus_size == logical.corpus_size
     assert cindex.avgdl == pytest.approx(logical.avgdl, abs=1e-12)
+    assert cindex.average_idf == pytest.approx(logical.average_idf, abs=1e-12)
+    want = {r["term"]: (r["df"], r["idf"]) for r in logical.term_stats.collect()}
+    got = {r["term"]: (r["df"], r["idf"]) for r in cindex.term_stats.collect()}
+    assert got.keys() == want.keys()
+    for term, (df, idf) in want.items():
+        assert got[term][0] == df, term
+        assert got[term][1] == pytest.approx(idf, abs=1e-12), term
+    want_dl = {r["doc_id"]: r["doc_len"] for r in logical.doc_stats.collect()}
+    got_dl = {r["doc_id"]: r["doc_len"] for r in cindex.doc_dim.collect()}
+    assert got_dl == want_dl
+    assert got_dl["https://synth.example/stopwords.html"] == 0
 
 
 @pytest.mark.parametrize("query", REFERENCE_QUERY_SET)
@@ -76,16 +100,16 @@ def test_wand_identical_to_full_decode(cindex, query):
         assert a == pytest.approx(b, abs=1e-9)
 
 
-def test_resume_skips_completed_stages(spark, tiny_pages, index_path):
+def test_resume_skips_completed_stages(spark, pages, index_path):
     """Re-running the build on the same input is a no-op (manifest hit)."""
     before = os.path.getmtime(os.path.join(index_path, "_MANIFEST.json"))
-    m = build_compressed_index(tiny_pages, index_path, CFG, doc_col="url", text_col="text")
+    m = build_compressed_index(pages, index_path, CFG, doc_col="url", text_col="text")
     after = os.path.getmtime(os.path.join(index_path, "_MANIFEST.json"))
     assert before == after  # nothing rewritten
     assert all(m["stages"][s]["complete"] for s in ("doc_dim", "term_stats", "corpus", "postings"))
 
 
-def test_resume_rebuilds_missing_stage(spark, tiny_pages, index_path):
+def test_resume_rebuilds_missing_stage(spark, pages, index_path):
     """Marking one stage incomplete rebuilds exactly that stage."""
     mf = os.path.join(index_path, "_MANIFEST.json")
     with open(mf) as f:
@@ -94,13 +118,13 @@ def test_resume_rebuilds_missing_stage(spark, tiny_pages, index_path):
     with open(mf, "w") as f:
         json.dump(m, f)
     doc_dim_mtime = os.path.getmtime(os.path.join(index_path, "doc_dim", "_SUCCESS"))
-    m2 = build_compressed_index(tiny_pages, index_path, CFG, doc_col="url", text_col="text")
+    m2 = build_compressed_index(pages, index_path, CFG, doc_col="url", text_col="text")
     assert m2["stages"]["postings"]["complete"]
     # doc_dim untouched
     assert os.path.getmtime(os.path.join(index_path, "doc_dim", "_SUCCESS")) == doc_dim_mtime
 
 
-def test_resume_after_interrupt_equals_fresh_build(spark, tiny_pages, index_path, tmp_path):
+def test_resume_after_interrupt_equals_fresh_build(spark, pages, index_path, tmp_path):
     """Kill-and-resume equivalence (SURVEY §5.3.4): wipe the artifacts of
     the stages 'in flight' at the simulated crash, resume, and require the
     resumed index to answer queries identically to the uninterrupted one."""
@@ -109,7 +133,7 @@ def test_resume_after_interrupt_equals_fresh_build(spark, tiny_pages, index_path
     from search_engine_spark.functions.tokenize import query_tokens_py
 
     path2 = str(tmp_path / "interrupted")
-    build_compressed_index(tiny_pages, path2, CFG, doc_col="url", text_col="text")
+    build_compressed_index(pages, path2, CFG, doc_col="url", text_col="text")
     # simulate a crash mid-way: postings + term_stats never committed
     mf = os.path.join(path2, "_MANIFEST.json")
     with open(mf) as f:
@@ -121,7 +145,7 @@ def test_resume_after_interrupt_equals_fresh_build(spark, tiny_pages, index_path
     shutil.rmtree(os.path.join(path2, "postings"))
     shutil.rmtree(os.path.join(path2, "term_stats"))
 
-    m2 = build_compressed_index(tiny_pages, path2, CFG, doc_col="url", text_col="text")
+    m2 = build_compressed_index(pages, path2, CFG, doc_col="url", text_col="text")
     assert all(m2["stages"][s]["complete"] for s in ("doc_dim", "term_stats", "corpus", "postings"))
 
     a = CompressedIndex(spark, index_path, CFG)

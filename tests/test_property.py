@@ -4,6 +4,7 @@ query tokens, Zipf-ish repetition, unicode punctuation)."""
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
@@ -16,7 +17,7 @@ from hypothesis import strategies as st
 
 from search_engine_spark.config import load_stopwords
 from search_engine_spark.config import EngineConfig
-from search_engine_spark.index.build import _encode_partition_arrow_factory
+from search_engine_spark.index.build import _encode_partition_arrow_factory, build_compressed_index
 from search_engine_spark.index.codec import (
     binary_values,
     decode_blocks,
@@ -31,6 +32,7 @@ from search_engine_spark.oracle.pyref import (
     oracle_search,
     oracle_tokenize_index,
 )
+from search_engine_spark.serving.warm_reader import WarmIndexReader
 
 # ------------------------------------------------------------------ codec
 
@@ -251,13 +253,27 @@ CANCELLING_CORPUS = [
 ]
 
 
-def test_average_idf_snaps_to_zero_on_cancelling_corpus(spark):
+@pytest.mark.parametrize("builder", ["logical", "compressed"])
+def test_average_idf_snaps_to_zero_on_cancelling_corpus(spark, tmp_path, builder):
     stop = load_stopwords()
     oidx = build_oracle_index(CANCELLING_CORPUS, stop)
     assert oidx.average_idf == 0.0
     sdf = spark.createDataFrame(CANCELLING_CORPUS, "doc_id string, text string")
-    idx = build_bm25_index(sdf, doc_col="doc_id", text_col="text")
-    assert idx.average_idf == 0.0
+    if builder == "logical":
+        idx = build_bm25_index(sdf, doc_col="doc_id", text_col="text")
+        assert idx.average_idf == 0.0
+        return
+    path = str(tmp_path / "cindex")
+    build_compressed_index(sdf, path, doc_col="doc_id", text_col="text")
+    with open(os.path.join(path, "corpus.json")) as f:
+        assert json.load(f)["average_idf"] == 0.0
+    reader = WarmIndexReader(path)
+    for query in ("aa", "aa uu", "uu", "zzqqxx"):
+        got = reader.search_topk(query.split())
+        want = oracle_search(oidx, query, use_fuzzy=False)
+        assert [d for _, d, _ in got] == [u for u, _ in want], query
+        for (_, _, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9), query
 
 
 def test_bm25_rank_parity_when_average_idf_cancels(spark):

@@ -7,7 +7,9 @@ under its own Spark job group, and Spark's status tracker counts the jobs
 the group ran. Each batch's top-k is checked against the pure-Python
 oracle over all pages ingested so far. Prints one JSON line per batch and
 a summary line with the medians over the batches after the first (the
-first starts the Python workers).
+first starts the Python workers). ``persisted_rdds`` is the session's
+count of persisted RDDs once the batch's index is unpersisted: it stays
+flat unless a phase leaks a cached relation.
 
 Usage: python tools/bench_ingest_phases.py [--batches 4] [--batch-size 1000]
                                            [--queries 8] [--seed 7]
@@ -116,6 +118,7 @@ def main() -> None:
                 )
             finally:
                 idx.unpersist()
+            persisted = sc._jsc.getPersistentRDDs().size()
             sc.setLocalProperty("spark.jobGroup.id", None)
             oracle = build_oracle_index([(u, t) for u, t in pages[:hi] if t.strip()], DEFAULT_CONFIG.stopwords)
             rec = {
@@ -126,6 +129,7 @@ def main() -> None:
                 "search_s": round(t_search, 3),
                 "fresh_s": round(t_process + t_assemble + t_search, 3),
                 **{f"{p}_jobs": jobs_in(sc, g) for p, g in groups.items()},
+                "persisted_rdds": persisted,
                 "correct": matches_oracle(rows, oracle, queries),
             }
             rec["jobs"] = sum(rec[f"{p}_jobs"] for p in PHASES)

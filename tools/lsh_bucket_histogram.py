@@ -40,6 +40,7 @@ def main() -> None:
     corpus = os.environ.get("LSH_HIST_CORPUS", "skewed")
 
     from search_engine_spark.operators.dedup import (
+        lsh_band_keys,
         minhash_signatures,
         unpersist_dedup_caches,
     )
@@ -56,18 +57,7 @@ def main() -> None:
         sig = minhash_signatures(
             pages, num_hashes=num_hashes, doc_col="url", hash_fn="xxhash64"
         )
-        banded = sig.withColumn("band", (F.col("h") / rows_per_band).cast("int"))
-        # same band_key construction as lsh_candidate_pairs (operators/dedup.py)
-        band_keys = banded.groupBy("doc_id", "band").agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("h", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                ",",
-            ).alias("band_key")
-        )
-        buckets = band_keys.groupBy("band", "band_key").agg(
+        buckets = lsh_band_keys(sig, rows_per_band).groupBy("band", "band_key").agg(
             F.count(F.lit(1)).alias("m")
         )
         pairs = (F.col("m") * (F.col("m") - 1) / 2).cast("long")
