@@ -75,7 +75,11 @@ class EngineConfig:
     min_fuzzy_term_len: int = 3  # vocabulary terms shorter than this are skipped
     # index layout / scale knobs
     block_size: int = 128              # docs per compressed posting block
-    index_partitions: int = 32         # range partitions of the postings index
+    # range partitions of the dense-id pass and the postings index; None
+    # derives them from the input (index/build.resolve_index_partitions:
+    # one per 16 MiB of text, at least the core count, at most 32), an
+    # int is used as given
+    index_partitions: int | None = None
     shuffle_partitions: int = 32
     salt_buckets: int = 16             # head-term salting fan-out
     head_term_df_threshold: int = 100_000  # df above which a term is "head"

@@ -22,6 +22,13 @@ Scale design:
   driver-side offsets from per-partition counts. No window at all: a
   PARTITION BY spark_partition_id window re-shuffles the full payload and
   hash-collides the few pid keys into skewed buckets (see assign_dense_ids).
+- partition count: both range shuffles use ``index_partitions``; left at
+  None it is sized from the input (resolve_index_partitions): one partition
+  per 16 MiB of text, at least the core count, at most 32. Each partition
+  pays the fixed per-task cost of two Arrow UDF passes (tokenize, encode),
+  which dominates small partitions: at 32 partitions a 10k-page build
+  (22 MB of text) spends about a third of its wall on it. It resolves to
+  4 partitions; a 300k-page build (670 MB) to 32.
 - encoded postings are repartitionByRange(term, doc_int): a Zipf head term
   SPANS partitions instead of hammering one reducer (the salting answer for
   posting-list materialization), and the sorted order gives parquet
@@ -36,6 +43,7 @@ Scale design:
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
@@ -78,15 +86,35 @@ POSTINGS_SCHEMA = StructType(
 )
 
 
-def input_snapshot_digest(docs: DataFrame, doc_col: str, text_col: str) -> str:
-    """Order-insensitive content digest of the input table (snapshot id)."""
+# ceiling of the derived partition count; 300k pages (670 MB of text), the
+# size of the 1-vs-4-core scaling runs, resolve to it
+MAX_INDEX_PARTITIONS = 32
+# text bytes per derived partition; 8-21 MiB all keep 300k pages at 32
+TARGET_PARTITION_BYTES = 16 << 20
+
+
+def input_snapshot_digest(docs: DataFrame, doc_col: str, text_col: str) -> tuple[str, int]:
+    """Order-insensitive content digest of the input table (snapshot id),
+    and the input's text size in UTF-8 bytes, from one aggregation."""
     row = docs.select(
-        F.xxhash64(F.col(doc_col).cast("string"), F.col(text_col)).alias("h")
+        F.xxhash64(F.col(doc_col).cast("string"), F.col(text_col)).alias("h"),
+        F.octet_length(text_col).alias("b"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor("h").alias("h"),  # order-insensitive, overflow-free
+        F.sum("b").alias("b"),
     ).collect()[0]
-    return f"{row['n']}:{row['h']}"
+    return f"{row['n']}:{row['h']}", int(row["b"] or 0)
+
+
+def resolve_index_partitions(cfg: EngineConfig, text_bytes: int, cores: int) -> int:
+    """Range partitions for a build over ``text_bytes`` of text: an explicit
+    ``cfg.index_partitions`` as given, else one per TARGET_PARTITION_BYTES,
+    at least ``cores`` and at most MAX_INDEX_PARTITIONS."""
+    if cfg.index_partitions is not None:
+        return cfg.index_partitions
+    wanted = math.ceil(text_bytes / TARGET_PARTITION_BYTES)
+    return min(MAX_INDEX_PARTITIONS, max(cores, wanted))
 
 
 def assign_dense_ids(
@@ -111,8 +139,8 @@ def assign_dense_ids(
     evaluated on the range-sorted partitions (its documented layout is
     ``partition_index << 33 | row_index_within_partition``, so the low 33
     bits ARE the dense within-partition row number in sorted order; rows
-    per range partition must stay below 2^33 ≈ 8.6e9 — at the target 32
-    partitions per job that is far beyond any realistic doc count). A
+    per range partition must stay below 2^33 ≈ 8.6e9 — even one partition
+    per 16 MiB of text, as a derived count gives, holds far fewer). A
     ``row_number() OVER (PARTITION BY pid)`` window would be wrong at
     scale in two ways, measured on the 600k-page weak-scaling leg: it
     hash-exchanges the FULL text payload a second time (the exchange this
@@ -308,7 +336,12 @@ def build_compressed_index(
 
     Dataflow (shuffle inventory — every shuffle justified). The corpus
     statistics take the logical index's one path in operators/corpus_stats
-    (``build_postings_local`` -> ``doc_lengths`` -> ``floored_term_stats``):
+    (``build_postings_local`` -> ``doc_lengths`` -> ``floored_term_stats``).
+    Both range shuffles use the partition count resolved right after the
+    input digest (resolve_index_partitions), which the manifest's
+    ``config`` records. The build opens its own files with the schema it
+    wrote (the staged relation's, POSTINGS_SCHEMA): inferring it would cost
+    one Spark job per open.
       1. dense-id assignment: ONE doc-level range shuffle of the full doc
          table (rows = docs) — ids are assigned in place, so the text
          column crosses exactly one exchange and there is NO join-back
@@ -330,10 +363,12 @@ def build_compressed_index(
          6.6 s of 32 s at 40M postings, local[4])
     """
     spark = docs.sparkSession
-    digest = input_snapshot_digest(docs, doc_col, text_col)
+    digest, text_bytes = input_snapshot_digest(docs, doc_col, text_col)
+    partitions = resolve_index_partitions(cfg, text_bytes, spark.sparkContext.defaultParallelism)
+    config = _cfg_dict(cfg, partitions)
     manifest = _load_manifest(path)
-    if manifest.get("input_digest") != digest or manifest.get("config") != _cfg_dict(cfg):
-        manifest = {"input_digest": digest, "config": _cfg_dict(cfg), "stages": {}}
+    if manifest.get("input_digest") != digest or manifest.get("config") != config:
+        manifest = {"input_digest": digest, "config": config, "stages": {}}
     stages = manifest["stages"]
     all_stages = ("doc_dim", "term_stats", "corpus", "postings")
     if all(s in stages and stages[s].get("complete") for s in all_stages):
@@ -358,7 +393,7 @@ def build_compressed_index(
     # previous key-only map + sort-merge join-back cost a second full-text
     # exchange+sort and once auto-broadcast-aborted at 2M docs)
     cache_handles: list = []
-    docs_int = assign_dense_ids(base, cfg.index_partitions, handles=cache_handles)
+    docs_int = assign_dense_ids(base, partitions, handles=cache_handles)
 
     # postings staging table: tokenize once, spill to snappy parquet; the
     # three downstream jobs (doc_stats, df/idf, encode) each re-read a
@@ -372,13 +407,14 @@ def build_compressed_index(
     # Writing under such a dir logs a benign "All paths were ignored"
     # WARN during output-path resolution; direct reads of the dir work.
     staging_dir = os.path.join(path, "_staging_postings")
+    staged = build_postings_local(
+        docs_int, cfg, "doc_int", "text", weight_col="doc_weight"
+    ).withColumnRenamed("doc_id", "doc_int")
     if not (stage_done("staging") and os.path.isdir(staging_dir)):
         t0 = time.time()
-        build_postings_local(
-            docs_int, cfg, "doc_int", "text", weight_col="doc_weight"
-        ).withColumnRenamed("doc_id", "doc_int").write.mode("overwrite").parquet(staging_dir)
+        staged.write.mode("overwrite").parquet(staging_dir)
         record("staging", t0)
-    postings = spark.read.parquet(staging_dir)
+    postings = spark.read.schema(staged.schema).parquet(staging_dir)
 
     # doc stats (incl. zero-token docs) + corpus scalars
     doc_stats = (
@@ -430,7 +466,7 @@ def build_compressed_index(
         # _encode_partition_arrow_factory) — the JVM row sort was the build's
         # worst-scaling stage and the kernel already buffers the partition
         sorted_parts = (
-            postings.repartitionByRange(cfg.index_partitions, "term", "doc_int")
+            postings.repartitionByRange(partitions, "term", "doc_int")
             .join(F.broadcast(term_stats.select("term", "idf")), "term")
             .select("term", "doc_int", "tf", "doc_len", "doc_weight", "idf")
             .withColumn("pid", F.spark_partition_id())
@@ -442,7 +478,7 @@ def build_compressed_index(
         # per-file lineage manifest (Iceberg-manifest analog): block/posting
         # counts from a column-pruned scan (n + term only — the binary
         # payload columns are never re-read); file bytes from the filesystem
-        written = spark.read.parquet(os.path.join(path, "postings"))
+        written = spark.read.schema(POSTINGS_SCHEMA).parquet(os.path.join(path, "postings"))
         files = (
             written.groupBy(F.input_file_name().alias("file"))
             .agg(
@@ -492,11 +528,11 @@ def _cleanup_staging(path: str, stages: dict) -> None:
         shutil.rmtree(os.path.join(path, "_staging_postings"), ignore_errors=True)
 
 
-def _cfg_dict(cfg: EngineConfig) -> dict:
+def _cfg_dict(cfg: EngineConfig, partitions: int) -> dict:
     return {
         "k1": cfg.k1,
         "b": cfg.b,
         "epsilon": cfg.epsilon,
         "block_size": cfg.block_size,
-        "index_partitions": cfg.index_partitions,
+        "index_partitions": partitions,
     }

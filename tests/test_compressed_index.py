@@ -1,5 +1,6 @@
 """Materialized compressed index: round-trip vs the logical path + oracle,
-resume-from-manifest semantics, and block-max pruning equivalence."""
+resume-from-manifest semantics, block-max pruning equivalence, and the
+partition count derived from the input."""
 
 from __future__ import annotations
 
@@ -8,12 +9,19 @@ import os
 
 import pytest
 
-from search_engine_spark.config import EngineConfig
+from search_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from search_engine_spark.functions.tokenize import query_tokens_py
-from search_engine_spark.index.build import build_compressed_index
+from search_engine_spark.index.build import (
+    MAX_INDEX_PARTITIONS,
+    TARGET_PARTITION_BYTES,
+    build_compressed_index,
+    resolve_index_partitions,
+)
 from search_engine_spark.index.query import CompressedIndex
 from search_engine_spark.operators.corpus_stats import build_bm25_index
 from search_engine_spark.operators.scoring import search_topk
+from search_engine_spark.oracle.pyref import build_oracle_index, oracle_search
+from search_engine_spark.serving import WarmIndexReader
 from search_engine_spark.sources.synth import REFERENCE_QUERY_SET
 
 CFG = EngineConfig(block_size=16, index_partitions=8)  # small blocks -> many
@@ -230,3 +238,67 @@ def test_wand_identical_on_skewed_corpus_with_active_pruning(spark, tmp_path):
         for r in ci.search_topk(query, use_wand=True).orderBy("rank").collect()
     ]
     assert full == wand and len(full) > 0
+
+
+def test_resolve_index_partitions_rule():
+    """Derived count: ceil(text bytes / 16 MiB), floored at the core count
+    and capped at 32; an explicit count is used as given."""
+    mib16 = TARGET_PARTITION_BYTES
+    assert mib16 == 16 * 2**20 and MAX_INDEX_PARTITIONS == 32
+    # floor at cores for a tiny or empty input
+    assert resolve_index_partitions(DEFAULT_CONFIG, 0, 4) == 4
+    assert resolve_index_partitions(DEFAULT_CONFIG, 1000, 4) == 4
+    assert resolve_index_partitions(DEFAULT_CONFIG, 0, 1) == 1
+    # ceil just above a 16 MiB boundary
+    assert resolve_index_partitions(DEFAULT_CONFIG, mib16, 1) == 1
+    assert resolve_index_partitions(DEFAULT_CONFIG, mib16 + 1, 1) == 2
+    assert resolve_index_partitions(DEFAULT_CONFIG, 5 * mib16 + 1, 4) == 6
+    # the build_serve corpus (10k pages, 22.4 MB of text) on 4 cores
+    assert resolve_index_partitions(DEFAULT_CONFIG, 22_400_000, 4) == 4
+    # ceiling at 32: 300k pages (670 MB), and more cores than the ceiling
+    assert resolve_index_partitions(DEFAULT_CONFIG, 670_000_000, 4) == 32
+    assert resolve_index_partitions(DEFAULT_CONFIG, 670_000_000, 1) == 32
+    assert resolve_index_partitions(DEFAULT_CONFIG, 0, 64) == 32
+    # an explicit count is returned unchanged, below the floor or above the cap
+    for explicit in (2, 8, 32, 64):
+        cfg = EngineConfig(index_partitions=explicit)
+        for text_bytes, cores in ((0, 4), (670_000_000, 4), (mib16 + 1, 1)):
+            assert resolve_index_partitions(cfg, text_bytes, cores) == explicit
+
+
+def test_default_config_derives_partitions(spark, pages, tmp_path):
+    """A DEFAULT_CONFIG build records the resolved count (not None) in its
+    manifest, resumes on the same input, holds the same documents and
+    postings as an explicit 32-partition build, and answers as the oracle."""
+    path = str(tmp_path / "derived")
+    m = build_compressed_index(pages, path, doc_col="url", text_col="text")
+    resolved = m["config"]["index_partitions"]
+    # the tiny corpus is far below 16 MiB: the floor at the core count
+    assert resolved == spark.sparkContext.defaultParallelism
+    assert 0 < m["stages"]["postings"]["files"] <= resolved
+
+    mf = os.path.join(path, "_MANIFEST.json")
+    before = os.path.getmtime(mf)
+    m_again = build_compressed_index(pages, path, doc_col="url", text_col="text")
+    assert os.path.getmtime(mf) == before  # resumed: nothing rewritten
+    assert m_again == m
+
+    fixed = build_compressed_index(
+        pages, str(tmp_path / "fixed32"), EngineConfig(index_partitions=32),
+        doc_col="url", text_col="text",
+    )
+    assert fixed["config"]["index_partitions"] == 32
+    assert fixed["input_digest"] == m["input_digest"]
+    for stage, key in (("doc_dim", "rows"), ("term_stats", "rows"), ("postings", "postings")):
+        assert m["stages"][stage][key] == fixed["stages"][stage][key], stage
+
+    docs = [(r["url"], r["text"]) for r in pages.collect() if r["text"].strip()]
+    oidx = build_oracle_index(docs, DEFAULT_CONFIG.stopwords)
+    assert oidx.doc_len.count(0) == 1  # the all-stopword page
+    reader = WarmIndexReader(path, preload=True)
+    for query in REFERENCE_QUERY_SET:
+        got = reader.search(query)
+        want = oracle_search(oidx, query, use_fuzzy=False)
+        assert [d for _, d, _ in got] == [u for u, _ in want], query
+        for (_, _, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9), query

@@ -11,7 +11,9 @@ package from the shipped zip, not the driver's cwd.
 
 Pipeline measured: read pages parquet -> HTML extraction (pandas UDF) ->
 tokenize -> postings/stats -> compressed block-max index written to disk.
-Prints one JSON line {"master", "wall_sec", "docs", "docs_per_sec"}.
+Prints one JSON line {"master", "wall_sec", "docs", "docs_per_sec",
+"index_partitions", ...}; ``index_partitions`` is the build's resolved
+range-partition count, read from its manifest.
 """
 
 from __future__ import annotations
@@ -123,12 +125,12 @@ def main() -> None:
 
     # per-stage walls from the build's own manifest: the scaling diagnosis
     # needs to know WHICH stage fails to scale, not just the total
-    stage_walls = {}
+    stage_walls, partitions = {}, None
     try:
         with open(os.path.join(out_path, "_MANIFEST.json")) as f:
-            stage_walls = {
-                k: v.get("wall_sec") for k, v in json.load(f)["stages"].items()
-            }
+            manifest = json.load(f)
+        stage_walls = {k: v.get("wall_sec") for k, v in manifest["stages"].items()}
+        partitions = manifest["config"]["index_partitions"]
     except OSError:
         pass
 
@@ -176,6 +178,7 @@ def main() -> None:
                 "docs_per_sec": round(n_docs / wall, 2),
                 "extract_sec": t_extract,
                 "build_sec": t_build,
+                "index_partitions": partitions,
                 "stage_walls": stage_walls,
                 **({"spark_stages": spark_stages} if spark_stages else {}),
             }
