@@ -19,7 +19,7 @@ Scale design:
 - dense docID assignment is the two-pass zipWithIndex pattern expressed in
   DataFrames: repartitionByRange(doc_id) -> per-partition row numbers from
   monotonically_increasing_id's low 33 bits (zero extra exchange) +
-  driver-side offsets from per-partition counts. No window at all: a
+  per-partition offsets as an array literal (no join). No window at all: a
   PARTITION BY spark_partition_id window re-shuffles the full payload and
   hash-collides the few pid keys into skewed buckets (see assign_dense_ids).
 - partition count: both range shuffles use ``index_partitions``; left at
@@ -47,8 +47,10 @@ import math
 import os
 import shutil
 import time
+from itertools import accumulate
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -68,6 +70,9 @@ from search_engine_spark.operators.corpus_stats import (
     doc_lengths,
     floored_term_stats,
 )
+
+JOB_DESCRIPTION = "spark.job.description"  # the local property setJobDescription sets
+STAGES = ("doc_dim", "term_stats", "corpus", "postings")  # a complete index's stages
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -122,10 +127,10 @@ def assign_dense_ids(
     partitions: int,
     id_col: str = "doc_id",
     handles: list | None = None,
-) -> DataFrame:
-    """input columns + ``doc_int`` dense 0..N-1 in id order — distributed
-    zipWithIndex (range partition -> per-partition row_number + driver-side
-    offsets; never a global single-partition window).
+) -> tuple[DataFrame, int]:
+    """(input columns + ``doc_int`` dense 0..N-1 in id order, N) —
+    distributed zipWithIndex (range partition -> per-partition row number
+    + per-partition offsets; never a global single-partition window).
 
     Pass the FULL table (not just the key column): one range shuffle of the
     payload here replaces the key-only shuffle PLUS the sort-merge join-back
@@ -134,6 +139,13 @@ def assign_dense_ids(
     doc-scale map and aborted on driver maxResultSize). ``handles`` (if
     given) receives the internal persisted relation so the caller can
     unpersist it after the last downstream action.
+
+    The offsets (running sums of the collected per-partition counts) are
+    an array literal indexed by partition id, not a broadcast relation: a
+    relation from a driver-side list costs a Python-worker job at every
+    evaluation. The array covers every pid up to the largest non-empty one:
+    a range partition can be empty, and ``element_at`` out of range raises
+    under ANSI mode.
 
     The per-partition row number comes from ``monotonically_increasing_id``
     evaluated on the range-sorted partitions (its documented layout is
@@ -154,25 +166,16 @@ def assign_dense_ids(
         .sortWithinPartitions(id_col)
         .withColumn("pid", F.spark_partition_id())
         .withColumn("rn", F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    from pyspark import StorageLevel
-
-    parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
     if handles is not None:
         handles.append(parts)
-    counts = {r["pid"]: r["cnt"] for r in parts.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], schema="pid int, off long"
-    )
-    return (
-        parts.join(F.broadcast(off_df), "pid")
-        .select(*df.columns, (F.col("off") + F.col("rn")).cast("long").alias("doc_int"))
-    )
+    counts = dict(parts.groupBy("pid").agg(F.count(F.lit(1))).collect())
+    sizes = [counts.get(p, 0) for p in range(max(counts, default=-1) + 1)]
+    offsets = list(accumulate(sizes, initial=0))  # rows before pid p; [-1] is N
+    off = F.array(*(F.lit(o) for o in offsets)).cast("array<bigint>")
+    doc_int = F.element_at(off, F.col("pid") + 1) + F.col("rn")
+    return parts.select(*df.columns, doc_int.alias("doc_int")), offsets[-1]
 
 
 def _encode_partition_arrow_factory(cfg: EngineConfig, avgdl: float):
@@ -336,25 +339,29 @@ def build_compressed_index(
 
     Dataflow (shuffle inventory — every shuffle justified). The corpus
     statistics take the logical index's one path in operators/corpus_stats
-    (``build_postings_local`` -> ``doc_lengths`` -> ``floored_term_stats``).
+    (``build_postings_local`` -> ``floored_term_stats`` -> ``doc_lengths``).
     Both range shuffles use the partition count resolved right after the
     input digest (resolve_index_partitions), which the manifest's
     ``config`` records. The build opens its own files with the schema it
     wrote (the staged relation's, POSTINGS_SCHEMA): inferring it would cost
-    one Spark job per open.
+    one Spark job per open. Each stage's jobs carry a job description
+    ("build_compressed_index: <stage>"), never a job group: a caller that
+    groups its jobs keeps every job of the build, and its own description.
       1. dense-id assignment: ONE doc-level range shuffle of the full doc
          table (rows = docs) — ids are assigned in place, so the text
-         column crosses exactly one exchange and there is NO join-back
+         column crosses exactly one exchange and there is NO join-back.
+         Its per-partition counts give n.
       2. postings: ``build_postings_local`` keyed by doc_int,
          partition-local (rows = postings, NO shuffle), written to a
-         parquet staging table: three downstream jobs (df/idf, doc_stats,
+         parquet staging table: three downstream jobs (df/idf, doc_dim,
          encode) re-read a column-pruned snappy file instead of
          rebuilding/holding a 40M-row columnar cache
-      3. doc_stats: ``doc_lengths``, a doc-level join on doc_int
-         (rows = docs)
-      4. df/idf + corpus scalars: ``floored_term_stats``, groupBy(term)/agg
+      3. df/idf + corpus scalars: ``floored_term_stats``, groupBy(term)/agg
          with map-side partial aggregation (shuffled rows ~ |V| x
-         partitions, tiny)
+         partitions, tiny). Its one collect gives average_idf, |V| (the
+         manifest's term_stats rows) and sum(tf); avgdl = sum(tf) / n.
+      4. doc_dim: ``doc_lengths``, a doc-level join on doc_int
+         (rows = docs), run once, inside the doc_dim write
       5. encode: ONE posting-level range shuffle on (term, doc_int) — the
          irreducible one that gives the index its global term-sorted order
          (head terms span partitions; parquet min/max prunes queries).
@@ -362,20 +369,34 @@ def build_compressed_index(
          before it shuffles 8 extra bytes/posting for nothing (measured
          6.6 s of 32 s at 40M postings, local[4])
     """
+    sc = docs.sparkSession.sparkContext
+    caller = sc.getLocalProperty(JOB_DESCRIPTION)
+    try:
+        return _build(docs, path, cfg, doc_col, text_col, weight_col)
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, caller)  # None clears it
+
+
+def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
     spark = docs.sparkSession
+
+    def describe(stage: str) -> float:
+        """Label the stage's Spark jobs; returns its start time."""
+        spark.sparkContext.setJobDescription(f"build_compressed_index: {stage}")
+        return time.time()
+
+    describe("input digest")
     digest, text_bytes = input_snapshot_digest(docs, doc_col, text_col)
     partitions = resolve_index_partitions(cfg, text_bytes, spark.sparkContext.defaultParallelism)
-    config = _cfg_dict(cfg, partitions)
+    config = {"k1": cfg.k1, "b": cfg.b, "epsilon": cfg.epsilon,
+              "block_size": cfg.block_size, "index_partitions": partitions}
     manifest = _load_manifest(path)
     if manifest.get("input_digest") != digest or manifest.get("config") != config:
         manifest = {"input_digest": digest, "config": config, "stages": {}}
     stages = manifest["stages"]
-    all_stages = ("doc_dim", "term_stats", "corpus", "postings")
-    if all(s in stages and stages[s].get("complete") for s in all_stages):
+    if all(s in stages and stages[s].get("complete") for s in STAGES):
         _cleanup_staging(path, stages)
         return manifest  # fully built for this input snapshot — nothing to do
-
-    from pyspark import StorageLevel
 
     def stage_done(name: str) -> bool:
         return name in stages and stages[name].get("complete")
@@ -388,20 +409,14 @@ def build_compressed_index(
     base = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
         F.col(doc_col).alias("doc_id"), F.col(text_col).alias("text"), weight
     )
-    # dense ids assigned IN PLACE on the full doc table: one range shuffle
-    # of the text column total, no join-back (see assign_dense_ids — the
-    # previous key-only map + sort-merge join-back cost a second full-text
-    # exchange+sort and once auto-broadcast-aborted at 2M docs)
     cache_handles: list = []
-    docs_int = assign_dense_ids(base, partitions, handles=cache_handles)
+    describe("dense ids")
+    docs_int, n = assign_dense_ids(base, partitions, handles=cache_handles)
 
-    # postings staging table: tokenize once, spill to snappy parquet; the
-    # three downstream jobs (doc_stats, df/idf, encode) each re-read a
-    # column-pruned scan — cheaper to build and to re-read than a 40M-row
-    # in-memory columnar cache (measured 25 s vs 29 s build, 1.5 s vs 2.0 s
-    # per downstream scan at 40M postings, local[4]), and it IS the
-    # checkpoint the 100 TB deployment needs anyway (executor loss replays
-    # a file scan, not the tokenize UDF).
+    # postings staging table: a column-pruned parquet re-read is cheaper
+    # than a 40M-row in-memory columnar cache (measured 25 s vs 29 s build,
+    # 1.5 s vs 2.0 s per downstream scan at 40M postings, local[4]), and
+    # executor loss replays a file scan, not the tokenize UDF.
     # underscore prefix on purpose: Spark's file index skips _-prefixed
     # children, so a read of the INDEX ROOT can never pick up staging rows.
     # Writing under such a dir logs a benign "All paths were ignored"
@@ -411,33 +426,36 @@ def build_compressed_index(
         docs_int, cfg, "doc_int", "text", weight_col="doc_weight"
     ).withColumnRenamed("doc_id", "doc_int")
     if not (stage_done("staging") and os.path.isdir(staging_dir)):
-        t0 = time.time()
+        t0 = describe("staging")
         staged.write.mode("overwrite").parquet(staging_dir)
         record("staging", t0)
     postings = spark.read.schema(staged.schema).parquet(staging_dir)
 
-    # doc stats (incl. zero-token docs) + corpus scalars
-    doc_stats = (
-        doc_lengths(docs_int.select("doc_id", "doc_int", "doc_weight"), postings, key="doc_int")
-        .select("doc_id", "doc_int", "doc_len", "doc_weight")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # sum(tf) = sum(doc_len): avgdl is the logical index's avg(doc_len) to
+    # the bit (one division of exact integer sums). The snapped average_idf
+    # goes to corpus.json, so every reader inherits the same deadband.
+    describe("stats")
+    term_stats, average_idf, tf_total, vocab_size = floored_term_stats(
+        postings, n, cfg, cache_handles
     )
-    row = doc_stats.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl")).collect()[0]
-    n, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
+    avgdl = tf_total / n if n else 0.0
 
-    # the snapped average_idf goes to corpus.json, so CompressedIndex and
-    # the warm & sharded readers inherit the logical index's deadband
-    term_stats, average_idf = floored_term_stats(postings, n, cfg, cache_handles)
-
+    # at most ``partitions`` files each: AQE does not coalesce the output
+    # of term_stats' cached relation
     if not stage_done("doc_dim"):
-        t0 = time.time()
-        doc_stats.write.mode("overwrite").parquet(os.path.join(path, "doc_dim"))
+        t0 = describe("doc_dim")
+        doc_dim = doc_lengths(
+            docs_int.select("doc_id", "doc_int", "doc_weight"), postings, key="doc_int"
+        ).select("doc_id", "doc_int", "doc_len", "doc_weight")
+        doc_dim.coalesce(partitions).write.mode("overwrite").parquet(os.path.join(path, "doc_dim"))
         record("doc_dim", t0, rows=n)
 
     if not stage_done("term_stats"):
-        t0 = time.time()
-        term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
-        record("term_stats", t0, rows=int(term_stats.count()))  # cached, no re-read
+        t0 = describe("term_stats")
+        term_stats.coalesce(partitions).write.mode("overwrite").parquet(
+            os.path.join(path, "term_stats")
+        )
+        record("term_stats", t0, rows=vocab_size)
 
     if not stage_done("corpus"):
         t0 = time.time()
@@ -456,15 +474,9 @@ def build_compressed_index(
         record("corpus", t0)
 
     if not stage_done("postings"):
-        t0 = time.time()
-        # idf joins AFTER the range exchange: broadcast hash joins preserve
-        # the child's partitioning, and shuffling idf with every posting
-        # costs 8 bytes/row of pure exchange IO (measured 6.6 s at 40M
-        # postings, local[4])
-        # NO sortWithinPartitions: the (term, doc_int) ordering is done by a
-        # numpy lexsort inside the encode kernel (see
-        # _encode_partition_arrow_factory) — the JVM row sort was the build's
-        # worst-scaling stage and the kernel already buffers the partition
+        t0 = describe("postings")
+        # idf joins AFTER the range exchange (Dataflow 5); NO
+        # sortWithinPartitions: the encode kernel sorts (term, doc_int)
         sorted_parts = (
             postings.repartitionByRange(partitions, "term", "doc_int")
             .join(F.broadcast(term_stats.select("term", "idf")), "term")
@@ -474,11 +486,13 @@ def build_compressed_index(
         encoded = sorted_parts.mapInArrow(
             _encode_partition_arrow_factory(cfg, avgdl), POSTINGS_SCHEMA
         )
-        encoded.write.mode("overwrite").parquet(os.path.join(path, "postings"))
+        pdir = os.path.join(path, "postings")
+        encoded.write.mode("overwrite").parquet(pdir)
         # per-file lineage manifest (Iceberg-manifest analog): block/posting
         # counts from a column-pruned scan (n + term only — the binary
         # payload columns are never re-read); file bytes from the filesystem
-        written = spark.read.schema(POSTINGS_SCHEMA).parquet(os.path.join(path, "postings"))
+        describe("lineage")
+        written = spark.read.schema(POSTINGS_SCHEMA).parquet(pdir)
         files = (
             written.groupBy(F.input_file_name().alias("file"))
             .agg(
@@ -488,16 +502,12 @@ def build_compressed_index(
             )
             .collect()
         )
-        sizes = {}
-        pdir = os.path.join(path, "postings")
-        for fn in os.listdir(pdir):
-            if fn.endswith(".parquet"):
-                sizes[fn] = os.path.getsize(os.path.join(pdir, fn))
-        rows = []
-        for r in files:
-            d = r.asDict()
-            d["file_bytes"] = sizes.get(os.path.basename(d["file"].split("://")[-1]), None)
-            rows.append(d)
+        sizes = {f: os.path.getsize(os.path.join(pdir, f)) for f in os.listdir(pdir)
+                 if f.endswith(".parquet")}
+        rows = [
+            {**r.asDict(), "file_bytes": sizes.get(os.path.basename(r["file"].split("://")[-1]))}
+            for r in files
+        ]
         os.makedirs(os.path.join(path, "manifests"), exist_ok=True)
         with open(os.path.join(path, "manifests", "postings_files.json"), "w") as f:
             json.dump(rows, f, indent=1)
@@ -510,7 +520,6 @@ def build_compressed_index(
             files=len(files),
         )
 
-    doc_stats.unpersist()
     for h in cache_handles:
         h.unpersist()
     _cleanup_staging(path, stages)
@@ -521,18 +530,6 @@ def _cleanup_staging(path: str, stages: dict) -> None:
     """Drop the postings staging table once every stage that reads it is
     complete (kept until then so a killed build resumes from the staging
     scan instead of re-tokenizing)."""
-    if all(
-        s in stages and stages[s].get("complete")
-        for s in ("doc_dim", "term_stats", "corpus", "postings")
-    ):
+    if all(s in stages and stages[s].get("complete") for s in STAGES):
         shutil.rmtree(os.path.join(path, "_staging_postings"), ignore_errors=True)
 
-
-def _cfg_dict(cfg: EngineConfig, partitions: int) -> dict:
-    return {
-        "k1": cfg.k1,
-        "b": cfg.b,
-        "epsilon": cfg.epsilon,
-        "block_size": cfg.block_size,
-        "index_partitions": partitions,
-    }

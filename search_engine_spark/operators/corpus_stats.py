@@ -244,25 +244,27 @@ def doc_lengths(docs: DataFrame, postings: DataFrame, key: str = "doc_id") -> Da
 
 def floored_term_stats(
     postings: DataFrame, n: int, cfg: EngineConfig, handles: list | None = None
-) -> tuple[DataFrame, float]:
-    """(term_stats, average_idf) of ``n`` documents' postings: document
-    frequency, then the two-phase epsilon floor (module docstring).
-    ``handles`` (if given) receives the persisted (term, df, idf_raw)
-    relation, for the caller to unpersist after its last read."""
-    raw = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).withColumn(
+) -> tuple[DataFrame, float, int, int]:
+    """(term_stats, average_idf, tf_total, vocab_size) of ``n`` documents'
+    postings: document frequency, then the two-phase epsilon floor (module
+    docstring); the average's collect also sums tf (= the summed doc_len)
+    and counts |V|. ``handles`` (if given) receives the persisted (term,
+    df, cf, idf_raw) relation, for the caller to unpersist after use."""
+    per_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+    raw = per_term.withColumn(
         "idf_raw", F.log(F.lit(float(n)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
     )
     raw = raw.persist(StorageLevel.MEMORY_AND_DISK)  # read by the average and every query
     if handles is not None:
         handles.append(raw)
-    avg_row = raw.agg(F.avg("idf_raw").alias("a")).collect()[0]
+    row = raw.agg(F.avg("idf_raw"), F.sum("cf"), F.count(F.lit(1))).collect()[0]
     # snap_zero: a cancelled average's float-noise sign is summation-order
     # dependent and the floor amplifies it into a rank flip (config.py
     # AVERAGE_IDF_ZERO_TOL; oracle/pyref.py applies the same deadband)
-    average_idf = snap_zero(float(avg_row["a"] or 0.0))
+    average_idf = snap_zero(float(row[0] or 0.0))
     floor = cfg.epsilon * average_idf
     idf = F.when(F.col("idf_raw") < 0, F.lit(floor)).otherwise(F.col("idf_raw"))
-    return raw.select("term", "df", idf.alias("idf")), average_idf
+    return raw.select("term", "df", idf.alias("idf")), average_idf, int(row[1] or 0), row[2]
 
 
 def build_bm25_index(
@@ -307,7 +309,7 @@ def build_bm25_index(
     n, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
     handles: list = []
-    term_stats, average_idf = floored_term_stats(postings, n, cfg, handles)
+    term_stats, average_idf, _, _ = floored_term_stats(postings, n, cfg, handles)
     return BM25Index(
         postings=postings,
         doc_stats=doc_stats,

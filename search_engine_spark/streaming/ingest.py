@@ -144,7 +144,7 @@ class IncrementalIndexer:
         n = st["n_docs"]
         avgdl = (st["sum_doc_len"] / n) if n else 0.0
         handles: list = []
-        term_stats, average_idf = floored_term_stats(postings, n, self.cfg, handles)
+        term_stats, average_idf, _, _ = floored_term_stats(postings, n, self.cfg, handles)
         return BM25Index(
             postings=postings, doc_stats=doc_stats, term_stats=term_stats,
             corpus_size=n, avgdl=avgdl, average_idf=average_idf, cfg=self.cfg,

@@ -1,6 +1,8 @@
 """Materialized compressed index: round-trip vs the logical path + oracle,
-resume-from-manifest semantics, block-max pruning equivalence, and the
-partition count derived from the input."""
+resume-from-manifest semantics, block-max pruning equivalence, the
+partition count derived from the input, dense ids without a join, the
+corpus scalars and file counts of the written tables, and the build's
+Spark jobs staying in the caller's job group."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ from search_engine_spark.functions.tokenize import query_tokens_py
 from search_engine_spark.index.build import (
     MAX_INDEX_PARTITIONS,
     TARGET_PARTITION_BYTES,
+    assign_dense_ids,
     build_compressed_index,
     resolve_index_partitions,
 )
@@ -146,15 +149,24 @@ def test_resume_after_interrupt_equals_fresh_build(spark, pages, index_path, tmp
     mf = os.path.join(path2, "_MANIFEST.json")
     with open(mf) as f:
         m = json.load(f)
-    for stage in ("postings", "term_stats"):
+    for stage in ("postings", "term_stats", "corpus"):
         m["stages"][stage]["complete"] = False
     with open(mf, "w") as f:
         json.dump(m, f)
     shutil.rmtree(os.path.join(path2, "postings"))
     shutil.rmtree(os.path.join(path2, "term_stats"))
+    os.remove(os.path.join(path2, "corpus.json"))
 
     m2 = build_compressed_index(pages, path2, CFG, doc_col="url", text_col="text")
     assert all(m2["stages"][s]["complete"] for s in ("doc_dim", "term_stats", "corpus", "postings"))
+    # the scalars rewritten after doc_dim was complete are the fresh build's
+    with open(os.path.join(index_path, "corpus.json")) as f:
+        fresh = json.load(f)
+    with open(os.path.join(path2, "corpus.json")) as f:
+        resumed = json.load(f)
+    assert resumed["corpus_size"] == fresh["corpus_size"]
+    assert resumed["avgdl"] == fresh["avgdl"]
+    assert resumed["average_idf"] == pytest.approx(fresh["average_idf"], abs=1e-12)
 
     a = CompressedIndex(spark, index_path, CFG)
     b = CompressedIndex(spark, path2, CFG)
@@ -302,3 +314,62 @@ def test_default_config_derives_partitions(spark, pages, tmp_path):
         assert [d for _, d, _ in got] == [u for u, _ in want], query
         for (_, _, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, abs=1e-9), query
+
+
+def test_assign_dense_ids_with_empty_partitions(spark):
+    """More range partitions than rows leaves partitions empty; ids are
+    still exactly 0..N-1 in id order, and the plan holds no join."""
+    df = spark.createDataFrame([("c", 1), ("a", 2), ("b", 3)], "doc_id string, x int")
+    handles: list = []
+    out, n = assign_dense_ids(df, 8, handles=handles)
+    try:
+        assert n == 3
+        assert out.columns == ["doc_id", "x", "doc_int"]
+        rows = sorted((r["doc_id"], r["doc_int"]) for r in out.collect())
+        assert rows == [("a", 0), ("b", 1), ("c", 2)]
+        assert "Join" not in out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for h in handles:
+            h.unpersist()
+    empty, n0 = assign_dense_ids(df.limit(0), 8)
+    assert n0 == 0 and empty.collect() == []
+
+
+def test_corpus_scalars_and_file_counts(spark, pages, logical, tmp_path):
+    """corpus.json's n is doc_dim's row count and its avgdl is the logical
+    index's to the bit; doc_dim/ and term_stats/ hold at most
+    ``index_partitions`` files even when shuffles run wider (8 here)."""
+    path = str(tmp_path / "two_parts")
+    m = build_compressed_index(
+        pages, path, EngineConfig(block_size=16, index_partitions=2),
+        doc_col="url", text_col="text",
+    )
+    with open(os.path.join(path, "corpus.json")) as f:
+        corpus = json.load(f)
+    doc_dim = spark.read.parquet(os.path.join(path, "doc_dim"))
+    assert corpus["corpus_size"] == doc_dim.count() == m["stages"]["doc_dim"]["rows"]
+    assert corpus["avgdl"] == logical.avgdl
+    assert m["stages"]["term_stats"]["rows"] == logical.term_stats.count()
+    for table in ("doc_dim", "term_stats"):
+        files = [f for f in os.listdir(os.path.join(path, table)) if f.endswith(".parquet")]
+        assert 0 < len(files) <= m["config"]["index_partitions"] == 2, table
+
+
+def test_build_jobs_stay_in_callers_job_group(spark, pages, tmp_path):
+    """The build labels its jobs with job descriptions, never a job group:
+    every job it runs stays in the caller's group, and the caller's
+    description is restored afterwards."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        build_compressed_index(
+            pages, str(tmp_path / "grouped"), CFG, doc_col="url", text_col="text"
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("caller-group")) > 0
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

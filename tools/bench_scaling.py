@@ -13,6 +13,14 @@ host lost ~2x parallel throughput between the small and big cohorts).
 Efficiency is reported three ways: best-of (capability), best same-window
 pair, and median pair.
 
+Each leg also records the host load it ran under, with perfbench's
+/proc/stat probes: ``steal_cores`` (time the hypervisor gave to other
+guests, averaged over the leg) and ``other_busy_cores`` (cores other
+processes kept busy in a short sample just before the leg; the leg's own
+JVM and Python workers cannot be told apart from other processes while
+it runs). A pair with either figure above SUSPECT_CORES on either leg is
+listed as suspect: its efficiency measures the host as much as the plan.
+
 Input and index output live on tmpfs (/dev/shm) when it exists: the
 north rule's criterion is compute-scaling between cluster sizes, and on a
 real N-executor cluster the scan and the index write land on N node-local
@@ -49,6 +57,8 @@ import time
 
 sys.path.insert(0, ".")
 
+from perfbench.sparkenv import cpu_ticks, host_busy, steal_cores  # noqa: E402
+
 N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else 40000
 SMALL = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 BIG = int(sys.argv[3]) if len(sys.argv) > 3 else 32
@@ -77,6 +87,8 @@ def ensure_input() -> None:
 
 
 REPEATS = int(os.environ.get("SCALING_REPEATS", "3"))
+# host load (cores) above which a pair is reported as suspect
+SUSPECT_CORES = 0.5
 
 
 def _cores_of(master: str) -> int:
@@ -96,10 +108,16 @@ def run_once(master: str, out: str, input_path: str = INPUT) -> dict | None:
     # for JVM+Python combined; taskset reproduces that contract.
     if os.environ.get("SCALING_PIN", "1") != "0":
         cmd = ["taskset", "-c", f"0-{_cores_of(master) - 1}", *cmd]
+    busy = host_busy()  # sampled while this leg has not started yet
+    ticks, t0 = cpu_ticks(), time.monotonic()
     p = subprocess.run(
         cmd,
         capture_output=True, text=True, timeout=7200,
     )
+    load = {
+        "steal_cores": round(steal_cores(ticks, time.monotonic() - t0), 2),
+        "other_busy_cores": round(busy, 2),
+    }
     lines = [l for l in p.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:
         # ENOSPC on the workdir is NOT a transient VM hiccup: tmpfs is
@@ -118,7 +136,11 @@ def run_once(master: str, out: str, input_path: str = INPUT) -> dict | None:
             f"scaling_job failed ({master}, rc={p.returncode}):\n{p.stderr[-2000:]}\n"
         )
         return None
-    return json.loads(lines[-1])
+    return {**json.loads(lines[-1]), **load}
+
+
+def _suspect(s: dict, b: dict) -> bool:
+    return any(r[k] > SUSPECT_CORES for r in (s, b) for k in ("steal_cores", "other_busy_cores"))
 
 
 def _free_gb(path: str) -> float:
@@ -176,7 +198,10 @@ def main() -> None:
             sys.stderr.write(
                 f"pair {i + 1}/{REPEATS}: small {s['docs_per_sec']} big "
                 f"{b['docs_per_sec']} eff "
-                f"{(b['docs_per_sec'] / s['docs_per_sec']) / ratio:.3f}\n"
+                f"{(b['docs_per_sec'] / s['docs_per_sec']) / ratio:.3f} "
+                f"steal {s['steal_cores']}/{b['steal_cores']} other busy "
+                f"{s['other_busy_cores']}/{b['other_busy_cores']}"
+                f"{' SUSPECT' if _suspect(s, b) else ''}\n"
             )
 
     smalls = [s for s, _ in pairs if s]
@@ -192,11 +217,17 @@ def main() -> None:
     eff_best = (r_big["docs_per_sec"] / r_small["docs_per_sec"]) / ratio
 
     # same-window view: efficiency within each interleaved pair
+    complete = [(s, b) for s, b in pairs if s and b]
     pair_effs = [
-        round((b["docs_per_sec"] / s["docs_per_sec"]) / ratio, 3)
-        for s, b in pairs
-        if s and b
+        round((b["docs_per_sec"] / s["docs_per_sec"]) / ratio, 3) for s, b in complete
     ]
+    load_keys = ("steal_cores", "other_busy_cores")
+    host_load = [
+        {"small": {k: s[k] for k in load_keys}, "big": {k: b[k] for k in load_keys}}
+        for s, b in complete
+    ]
+    # 1-based positions in pair_efficiencies
+    suspect_pairs = [i + 1 for i, (s, b) in enumerate(complete) if _suspect(s, b)]
     eff_pair_best = max(pair_effs) if pair_effs else None
     eff_pair_median = round(statistics.median(pair_effs), 3) if pair_effs else None
 
@@ -210,6 +241,8 @@ def main() -> None:
         "small": r_small,
         "big": r_big,
         "pair_efficiencies": pair_effs,
+        "pair_host_load": host_load,
+        "suspect_pairs": suspect_pairs,
         "eff_best_of": round(eff_best, 3),
         "eff_pair_best": eff_pair_best,
         "eff_pair_median": eff_pair_median,
@@ -225,6 +258,10 @@ def main() -> None:
         if WEAK
         else f"Scaling run {stamp} — {N_PAGES} pages (full build: extract -> tokenize -> stats -> compressed index; interleaved pairs)"
     )
+    load_text = " | ".join(
+        "; ".join(f"{h[leg]['steal_cores']}/{h[leg]['other_busy_cores']}" for leg in ("small", "big"))
+        for h in host_load
+    )
     with open("BENCH.md", "a") as f:
         f.write(
             f"""
@@ -236,6 +273,8 @@ def main() -> None:
 | local[{BIG}] | {N_PAGES} | {r_big['wall_sec']} | {r_big['docs_per_sec']} | {r_big['all_runs_docs_per_sec']} |
 
 Per-pair efficiencies (same-window interleaved reps): {pair_effs}
+Steal / other-busy cores per pair (local[{SMALL}] leg; local[{BIG}] leg): {load_text}
+Suspect pairs (> {SUSPECT_CORES} cores of steal or other load on a leg): {suspect_pairs or 'none'}
 Scaling efficiency (R_{BIG}/R_{SMALL})/({BIG}/{SMALL}) = **{result['scaling_efficiency']}**
 (best-of {result['eff_best_of']}, best pair {eff_pair_best}, median pair {eff_pair_median};
 target >= 0.8: {'PASS' if result['pass'] else 'FAIL'})
