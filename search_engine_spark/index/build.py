@@ -50,7 +50,6 @@ import time
 from itertools import accumulate
 
 import numpy as np
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,7 +71,6 @@ from search_engine_spark.operators.corpus_stats import (
 )
 
 JOB_DESCRIPTION = "spark.job.description"  # the local property setJobDescription sets
-STAGES = ("doc_dim", "term_stats", "corpus", "postings")  # a complete index's stages
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -166,8 +164,10 @@ def assign_dense_ids(
         .sortWithinPartitions(id_col)
         .withColumn("pid", F.spark_partition_id())
         .withColumn("rn", F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    from pyspark import StorageLevel
+
+    parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
     if handles is not None:
         handles.append(parts)
     counts = dict(parts.groupBy("pid").agg(F.count(F.lit(1))).collect())
@@ -388,13 +388,13 @@ def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
     describe("input digest")
     digest, text_bytes = input_snapshot_digest(docs, doc_col, text_col)
     partitions = resolve_index_partitions(cfg, text_bytes, spark.sparkContext.defaultParallelism)
-    config = {"k1": cfg.k1, "b": cfg.b, "epsilon": cfg.epsilon,
-              "block_size": cfg.block_size, "index_partitions": partitions}
+    config = _cfg_dict(cfg, partitions)
     manifest = _load_manifest(path)
     if manifest.get("input_digest") != digest or manifest.get("config") != config:
         manifest = {"input_digest": digest, "config": config, "stages": {}}
     stages = manifest["stages"]
-    if all(s in stages and stages[s].get("complete") for s in STAGES):
+    all_stages = ("doc_dim", "term_stats", "corpus", "postings")
+    if all(s in stages and stages[s].get("complete") for s in all_stages):
         _cleanup_staging(path, stages)
         return manifest  # fully built for this input snapshot — nothing to do
 
@@ -409,14 +409,21 @@ def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
     base = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
         F.col(doc_col).alias("doc_id"), F.col(text_col).alias("text"), weight
     )
+    # dense ids assigned IN PLACE on the full doc table: one range shuffle
+    # of the text column total, no join-back (see assign_dense_ids — the
+    # previous key-only map + sort-merge join-back cost a second full-text
+    # exchange+sort and once auto-broadcast-aborted at 2M docs)
     cache_handles: list = []
     describe("dense ids")
     docs_int, n = assign_dense_ids(base, partitions, handles=cache_handles)
 
-    # postings staging table: a column-pruned parquet re-read is cheaper
-    # than a 40M-row in-memory columnar cache (measured 25 s vs 29 s build,
-    # 1.5 s vs 2.0 s per downstream scan at 40M postings, local[4]), and
-    # executor loss replays a file scan, not the tokenize UDF.
+    # postings staging table: tokenize once, spill to snappy parquet; the
+    # three downstream jobs (df/idf, doc_dim, encode) each re-read a
+    # column-pruned scan — cheaper to build and to re-read than a 40M-row
+    # in-memory columnar cache (measured 25 s vs 29 s build, 1.5 s vs 2.0 s
+    # per downstream scan at 40M postings, local[4]), and it IS the
+    # checkpoint the 100 TB deployment needs anyway (executor loss replays
+    # a file scan, not the tokenize UDF).
     # underscore prefix on purpose: Spark's file index skips _-prefixed
     # children, so a read of the INDEX ROOT can never pick up staging rows.
     # Writing under such a dir logs a benign "All paths were ignored"
@@ -475,8 +482,14 @@ def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
 
     if not stage_done("postings"):
         t0 = describe("postings")
-        # idf joins AFTER the range exchange (Dataflow 5); NO
-        # sortWithinPartitions: the encode kernel sorts (term, doc_int)
+        # idf joins AFTER the range exchange: broadcast hash joins preserve
+        # the child's partitioning, and shuffling idf with every posting
+        # costs 8 bytes/row of pure exchange IO (measured 6.6 s at 40M
+        # postings, local[4])
+        # NO sortWithinPartitions: the (term, doc_int) ordering is done by a
+        # numpy lexsort inside the encode kernel (see
+        # _encode_partition_arrow_factory) — the JVM row sort was the build's
+        # worst-scaling stage and the kernel already buffers the partition
         sorted_parts = (
             postings.repartitionByRange(partitions, "term", "doc_int")
             .join(F.broadcast(term_stats.select("term", "idf")), "term")
@@ -486,13 +499,12 @@ def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
         encoded = sorted_parts.mapInArrow(
             _encode_partition_arrow_factory(cfg, avgdl), POSTINGS_SCHEMA
         )
-        pdir = os.path.join(path, "postings")
-        encoded.write.mode("overwrite").parquet(pdir)
+        encoded.write.mode("overwrite").parquet(os.path.join(path, "postings"))
         # per-file lineage manifest (Iceberg-manifest analog): block/posting
         # counts from a column-pruned scan (n + term only — the binary
         # payload columns are never re-read); file bytes from the filesystem
         describe("lineage")
-        written = spark.read.schema(POSTINGS_SCHEMA).parquet(pdir)
+        written = spark.read.schema(POSTINGS_SCHEMA).parquet(os.path.join(path, "postings"))
         files = (
             written.groupBy(F.input_file_name().alias("file"))
             .agg(
@@ -502,12 +514,16 @@ def _build(docs, path, cfg, doc_col, text_col, weight_col) -> dict:
             )
             .collect()
         )
-        sizes = {f: os.path.getsize(os.path.join(pdir, f)) for f in os.listdir(pdir)
-                 if f.endswith(".parquet")}
-        rows = [
-            {**r.asDict(), "file_bytes": sizes.get(os.path.basename(r["file"].split("://")[-1]))}
-            for r in files
-        ]
+        sizes = {}
+        pdir = os.path.join(path, "postings")
+        for fn in os.listdir(pdir):
+            if fn.endswith(".parquet"):
+                sizes[fn] = os.path.getsize(os.path.join(pdir, fn))
+        rows = []
+        for r in files:
+            d = r.asDict()
+            d["file_bytes"] = sizes.get(os.path.basename(d["file"].split("://")[-1]), None)
+            rows.append(d)
         os.makedirs(os.path.join(path, "manifests"), exist_ok=True)
         with open(os.path.join(path, "manifests", "postings_files.json"), "w") as f:
             json.dump(rows, f, indent=1)
@@ -530,6 +546,18 @@ def _cleanup_staging(path: str, stages: dict) -> None:
     """Drop the postings staging table once every stage that reads it is
     complete (kept until then so a killed build resumes from the staging
     scan instead of re-tokenizing)."""
-    if all(s in stages and stages[s].get("complete") for s in STAGES):
+    if all(
+        s in stages and stages[s].get("complete")
+        for s in ("doc_dim", "term_stats", "corpus", "postings")
+    ):
         shutil.rmtree(os.path.join(path, "_staging_postings"), ignore_errors=True)
 
+
+def _cfg_dict(cfg: EngineConfig, partitions: int) -> dict:
+    return {
+        "k1": cfg.k1,
+        "b": cfg.b,
+        "epsilon": cfg.epsilon,
+        "block_size": cfg.block_size,
+        "index_partitions": partitions,
+    }

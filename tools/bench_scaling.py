@@ -13,13 +13,15 @@ host lost ~2x parallel throughput between the small and big cohorts).
 Efficiency is reported three ways: best-of (capability), best same-window
 pair, and median pair.
 
-Each leg also records the host load it ran under, with perfbench's
-/proc/stat probes: ``steal_cores`` (time the hypervisor gave to other
-guests, averaged over the leg) and ``other_busy_cores`` (cores other
-processes kept busy in a short sample just before the leg; the leg's own
-JVM and Python workers cannot be told apart from other processes while
-it runs). A pair with either figure above SUSPECT_CORES on either leg is
-listed as suspect: its efficiency measures the host as much as the plan.
+Each leg also records host load, with perfbench's /proc/stat probes:
+``steal_cores`` (time the hypervisor gave to other guests, averaged over
+the leg) and ``pre_leg_busy_cores`` (cores other processes kept busy in a
+0.5 s sample taken just BEFORE the leg; the leg's own JVM and Python
+workers cannot be told apart from other processes while it runs, so load
+that starts during a leg is not seen). A pair with either figure above
+SUSPECT_CORES on either leg is listed as suspect: its efficiency measures
+the host as much as the plan. A pair that is not suspect still says
+nothing about other load during its legs.
 
 Input and index output live on tmpfs (/dev/shm) when it exists: the
 north rule's criterion is compute-scaling between cluster sizes, and on a
@@ -116,7 +118,7 @@ def run_once(master: str, out: str, input_path: str = INPUT) -> dict | None:
     )
     load = {
         "steal_cores": round(steal_cores(ticks, time.monotonic() - t0), 2),
-        "other_busy_cores": round(busy, 2),
+        "pre_leg_busy_cores": round(busy, 2),
     }
     lines = [l for l in p.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:
@@ -140,7 +142,7 @@ def run_once(master: str, out: str, input_path: str = INPUT) -> dict | None:
 
 
 def _suspect(s: dict, b: dict) -> bool:
-    return any(r[k] > SUSPECT_CORES for r in (s, b) for k in ("steal_cores", "other_busy_cores"))
+    return any(r[k] > SUSPECT_CORES for r in (s, b) for k in ("steal_cores", "pre_leg_busy_cores"))
 
 
 def _free_gb(path: str) -> float:
@@ -199,8 +201,8 @@ def main() -> None:
                 f"pair {i + 1}/{REPEATS}: small {s['docs_per_sec']} big "
                 f"{b['docs_per_sec']} eff "
                 f"{(b['docs_per_sec'] / s['docs_per_sec']) / ratio:.3f} "
-                f"steal {s['steal_cores']}/{b['steal_cores']} other busy "
-                f"{s['other_busy_cores']}/{b['other_busy_cores']}"
+                f"steal {s['steal_cores']}/{b['steal_cores']} pre-leg busy "
+                f"{s['pre_leg_busy_cores']}/{b['pre_leg_busy_cores']}"
                 f"{' SUSPECT' if _suspect(s, b) else ''}\n"
             )
 
@@ -221,7 +223,7 @@ def main() -> None:
     pair_effs = [
         round((b["docs_per_sec"] / s["docs_per_sec"]) / ratio, 3) for s, b in complete
     ]
-    load_keys = ("steal_cores", "other_busy_cores")
+    load_keys = ("steal_cores", "pre_leg_busy_cores")
     host_load = [
         {"small": {k: s[k] for k in load_keys}, "big": {k: b[k] for k in load_keys}}
         for s, b in complete
@@ -259,7 +261,7 @@ def main() -> None:
         else f"Scaling run {stamp} — {N_PAGES} pages (full build: extract -> tokenize -> stats -> compressed index; interleaved pairs)"
     )
     load_text = " | ".join(
-        "; ".join(f"{h[leg]['steal_cores']}/{h[leg]['other_busy_cores']}" for leg in ("small", "big"))
+        "; ".join(f"{h[leg]['steal_cores']}/{h[leg]['pre_leg_busy_cores']}" for leg in ("small", "big"))
         for h in host_load
     )
     with open("BENCH.md", "a") as f:
@@ -273,8 +275,8 @@ def main() -> None:
 | local[{BIG}] | {N_PAGES} | {r_big['wall_sec']} | {r_big['docs_per_sec']} | {r_big['all_runs_docs_per_sec']} |
 
 Per-pair efficiencies (same-window interleaved reps): {pair_effs}
-Steal / other-busy cores per pair (local[{SMALL}] leg; local[{BIG}] leg): {load_text}
-Suspect pairs (> {SUSPECT_CORES} cores of steal or other load on a leg): {suspect_pairs or 'none'}
+Steal over the leg / other-busy cores sampled before it, per pair (local[{SMALL}] leg; local[{BIG}] leg): {load_text}
+Suspect pairs (> {SUSPECT_CORES} cores of steal or pre-leg other load on a leg): {suspect_pairs or 'none'}
 Scaling efficiency (R_{BIG}/R_{SMALL})/({BIG}/{SMALL}) = **{result['scaling_efficiency']}**
 (best-of {result['eff_best_of']}, best pair {eff_pair_best}, median pair {eff_pair_median};
 target >= 0.8: {'PASS' if result['pass'] else 'FAIL'})

@@ -10,11 +10,7 @@ serving in that mode (each mode runs in its own child process, so its
 ``rss_mb`` is the reader's and the interpreter's alone — the RAM side of
 the preload trade), printing ONE JSON line.
 
-Usage: python tools/bench_warm_serving.py [sf_dir] [--pages N] [--queries M] [--partitions P]
-
-``--partitions`` builds with ``index_partitions=P`` (default: the count the
-build derives from its input), e.g. to compare the reader's RSS over 4
-and 32 part files of the same pages.
+Usage: python tools/bench_warm_serving.py [sf_dir] [--pages N] [--queries M]
 """
 
 from __future__ import annotations
@@ -51,13 +47,14 @@ def measure(reader, queries: list[list[str]]) -> dict:
     }
 
 
-def run_corpus(spark, df, doc_col, text_col, idx_dir, n_queries, cfg, vocab_cap=2000) -> dict:
+def run_corpus(spark, df, doc_col, text_col, idx_dir, n_queries, vocab_cap=2000) -> dict:
+    from search_engine_spark.config import DEFAULT_CONFIG
     from search_engine_spark.functions.tokenize import query_tokens_py
     from search_engine_spark.index.build import build_compressed_index
     from search_engine_spark.serving import WarmIndexReader
 
     t0 = time.time()
-    m = build_compressed_index(df, idx_dir, cfg, doc_col=doc_col, text_col=text_col)
+    m = build_compressed_index(df, idx_dir, DEFAULT_CONFIG, doc_col=doc_col, text_col=text_col)
     build_s = time.time() - t0
 
     import pyarrow.parquet as papq
@@ -115,7 +112,6 @@ def main() -> None:
     import shutil
     import tempfile
 
-    from search_engine_spark.config import EngineConfig
     from search_engine_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
@@ -126,10 +122,6 @@ def main() -> None:
         n_pages = int(sys.argv[sys.argv.index("--pages") + 1])
     if "--queries" in sys.argv:
         n_queries = int(sys.argv[sys.argv.index("--queries") + 1])
-    partitions = None
-    if "--partitions" in sys.argv:
-        partitions = int(sys.argv[sys.argv.index("--partitions") + 1])
-    cfg = EngineConfig(index_partitions=partitions)
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(app_name="bench_warm_serving", master=f"local[{cpus}]",
@@ -142,7 +134,7 @@ def main() -> None:
             "sf_dir": sf_dir,
             "n_docs": docs.count(),
             **run_corpus(spark, docs, "doc_id", "text",
-                         os.path.join(work, "docs_idx"), n_queries, cfg),
+                         os.path.join(work, "docs_idx"), n_queries),
         }
         if n_pages:
             from search_engine_spark.sources.synth import synth_pages_skewed_df
@@ -151,7 +143,7 @@ def main() -> None:
             out["pages_corpus"] = {
                 "n_docs": n_pages,
                 **run_corpus(spark, pages, "url", "text",
-                             os.path.join(work, "pages_idx"), n_queries, cfg),
+                             os.path.join(work, "pages_idx"), n_queries),
             }
         print(json.dumps(out))
     finally:
